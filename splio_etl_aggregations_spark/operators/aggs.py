@@ -1885,13 +1885,13 @@ def ml_auc_eval(spark, t):
     AUC = Σ_v np(v)·(nn_below(v) + nn(v)/2) / (NP·NN): each positive
     scores a win per negative strictly below its value and half a win
     per tied negative. The per-value cumulative negative count comes
-    from the two-phase distributed prefix sum (``two_phase_cumsum``) —
+    from the two-phase distributed prefix sum (``two_phase_scan``) —
     the only ordered pass, over |distinct values| rows, never a
     partition-less window over raw rows. (AUC ≈ 0.5 on these fixtures —
     value is independent of type by construction; the verified machinery
     is the deliverable.)
     """
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     per = (
         t["events"]
@@ -1906,7 +1906,7 @@ def ml_auc_eval(spark, t):
         )
         .cache()
     )
-    cum = two_phase_cumsum(per, [F.asc("v")], ["nn"]).select(
+    cum = two_phase_scan(per, [F.asc("v")], ["nn"]).select(
         "v", "np", "nn", (F.col("cum_nn") - F.col("nn")).alias("nn_below")
     )
     tot = per.agg(
@@ -3322,7 +3322,7 @@ def agg_abc_xyz_classes(spark, t):
     aggregates + one part-keyed join; output is the constant 9-cell
     matrix.
     """
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     part_rev = (
         t["lineitem"]
@@ -3334,7 +3334,7 @@ def agg_abc_xyz_classes(spark, t):
         )
         .cache()
     )
-    cum = two_phase_cumsum(
+    cum = two_phase_scan(
         part_rev, [F.desc("cents"), F.asc("l_partkey")], ["cents"]
     )
     total = part_rev.agg(F.sum("cents").alias("total_c"))
@@ -4460,7 +4460,7 @@ def agg_mann_whitney_u(spark, t):
     t = per-distinct-value tie-group size); the ordered pass runs over
     |distinct values| rows only.
     """
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     per = (
         t["events"]
@@ -4476,7 +4476,7 @@ def agg_mann_whitney_u(spark, t):
         )
         .cache()
     )
-    cum = two_phase_cumsum(per, [F.asc("v")], ["nn"]).select(
+    cum = two_phase_scan(per, [F.asc("v")], ["nn"]).select(
         "v", "np", "nn", (F.col("cum_nn") - F.col("nn")).alias("nn_below")
     )
     tie = F.col("np") + F.col("nn")
@@ -4553,7 +4553,7 @@ def agg_spearman_corr(spark, t):
     """
     from pyspark.sql import Window
 
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     li = t["lineitem"].select(
         F.col("l_quantity").alias("q"), F.col("l_extendedprice").alias("p")
@@ -4569,7 +4569,7 @@ def agg_spearman_corr(spark, t):
     rq = per_q.select("q", fractional_rank("q", F.sum("cnt").over(w_q)))
 
     per_p = li.groupBy("p").agg(F.count(F.lit(1)).alias("cnt"))
-    cum_p = two_phase_cumsum(per_p, [F.asc("p")], ["cnt"])
+    cum_p = two_phase_scan(per_p, [F.asc("p")], ["cnt"])
     rp = cum_p.select("p", fractional_rank("p", F.col("cum_cnt")))
     return (
         li.join(F.broadcast(rq), "q")

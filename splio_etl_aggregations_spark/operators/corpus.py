@@ -98,44 +98,18 @@ def corpus_pack_sequences(spark, t):
     lands in (docs straddle boundaries, as in GPT-style packing).
 
     The global running offset is the scale problem: a plain
-    ``SUM() OVER (ORDER BY doc_id)`` collapses to one task. This is the
-    two-phase form shared with ``win_global_rank_scalable``: range
-    partition on doc_id, local prefix sums per partition, then a 16-row
-    per-partition-total frame gives each partition its base offset.
+    ``SUM() OVER (ORDER BY doc_id)`` collapses to one task, so the
+    exclusive prefix is ``two_phase_scan``'s inclusive sum minus the row.
     """
+    from .windows import two_phase_scan
+
     d = t["documents"].select(
         "doc_id", F.size(_toks()).cast("bigint").alias("n_tokens")
     )
-    # cached so pid comes from ONE materialization of the range exchange
-    # (both window and offsets consume it; see two_phase_global_rank)
-    parts = (
-        d.repartitionByRange(16, F.asc("doc_id"))
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = parts.withColumn(
-        "local_prefix", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        parts.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("part_tokens"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("part_tokens").over(w_off), F.lit(0)).alias(
-                "base"
-            ),
-        )
-    )
-    tok_start = (F.col("base") + F.col("local_prefix")).cast("bigint")
+    tok_start = (F.col("cum_n_tokens") - F.col("n_tokens")).cast("bigint")
     last_tok = F.col("tok_start") + F.col("n_tokens") - 1
     return (
-        local.join(F.broadcast(offsets), "pid")
+        two_phase_scan(d, [F.asc("doc_id")], ["n_tokens"])
         .withColumn("tok_start", tok_start)
         .withColumn("seq_first", (F.col("tok_start") / SEQ_LEN).cast("bigint"))
         .withColumn("seq_last", (last_tok / SEQ_LEN).cast("bigint"))

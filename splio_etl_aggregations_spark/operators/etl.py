@@ -726,14 +726,14 @@ def dq_ks_drift(spark, t):
 
     Scale shape: one groupBy collapses the table to |distinct values|
     rows carrying both samples' counts, then the running CDFs come from
-    the two-phase distributed prefix sum (``two_phase_cumsum`` — a
+    the two-phase distributed prefix sum (``two_phase_scan`` — a
     partition-less ``SUM() OVER (ORDER BY v)`` here would funnel every
     distinct price through ONE task, the round-1 win_ntile failure
     mode). The gap column rounds to 6 dp BEFORE the argmax so both
     engines pick the same location row. 100 TB cost: one scan + one
     |values|-sized two-phase pass.
     """
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     is_ref = F.col("o_orderdate") < F.lit(PSI_SPLIT).cast("timestamp")
     # vals feeds the prefix-sum AND the totals; the prefix-sum helper
@@ -751,7 +751,7 @@ def dq_ks_drift(spark, t):
             F.count_if(~F.col("is_ref")).alias("nb"),
         )
     )
-    cum, src = two_phase_cumsum(
+    cum, src = two_phase_scan(
         vals, [F.asc("v")], ["na", "nb"], with_source=True
     )
     tot = src.agg(
@@ -1488,33 +1488,16 @@ def dq_monotonic_id_gap_check(spark, t):
     (pure min/max/count aggregates), and the gap census partitions ids
     into range buckets whose boundaries are audited separately — here,
     with ids dense by construction, the distributed form reduces to
-    the same aggregates, and the lag runs on the DISTINCT id frame
-    range-partitioned via the two-phase pattern.
+    the same aggregates, and the lag runs on the DISTINCT id frame: over
+    distinct ascending ids the previous id IS the exclusive running max,
+    so it comes from ``two_phase_scan``.
     """
-    from pyspark.sql import Window
+    from .windows import two_phase_scan
 
     ids = t["events"].select("event_id").distinct()
-    n_parts = 16
-    ranged = (
-        ids.repartitionByRange(n_parts, "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    w_local = Window.partitionBy("pid").orderBy("event_id")
-    local = ranged.withColumn("prev_local", F.lag("event_id").over(w_local))
-    w_off = Window.orderBy("pid")
-    bounds = (
-        ranged.groupBy("pid")
-        .agg(F.max("event_id").alias("pmax"))
-        .select("pid", F.lag("pmax").over(w_off).alias("prev_part_max"))
-    )
-    gaps = (
-        local.join(F.broadcast(bounds), "pid")
-        .select(
-            "event_id",
-            F.coalesce("prev_local", "prev_part_max").alias("prev_id"),
-        )
-    )
+    gaps = two_phase_scan(
+        ids, [F.asc("event_id")], ["event_id"], agg="max", inclusive=False
+    ).withColumnRenamed("cum_event_id", "prev_id")
     diff = F.col("event_id") - F.col("prev_id")
     return gaps.agg(
         F.count(F.lit(1)).alias("n_ids"),

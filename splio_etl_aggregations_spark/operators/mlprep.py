@@ -518,47 +518,22 @@ def corpus_subsample_tokens(spark, t):
     < budget), so the kept set is a prefix of the hash order and any
     engine re-derives it bit-identically.
 
-    The prefix sum over the hash order is the scale problem — the same
-    two-phase cumulative sum as ``corpus_pack_sequences`` (range
-    partition on the hash key, local prefixes, 16-row offset frame);
-    the budget filter then prunes everything past the cut.
+    The prefix sum over the hash order is the scale problem — the
+    exclusive prefix is ``two_phase_scan``'s inclusive sum minus the
+    row; the budget filter then prunes everything past the cut.
     """
+    from .windows import two_phase_scan
+
     d = t["documents"].select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
         ph60("doc_id", "sub").alias("h"),
     )
-    # cached so pid comes from ONE materialization of the range exchange
-    # (both window and offsets consume it; see two_phase_global_rank)
-    parts = (
-        d.repartitionByRange(16, F.asc("h"), F.asc("doc_id"))
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = parts.withColumn(
-        "local_prefix", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        parts.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("part_tokens"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("part_tokens").over(w_off), F.lit(0)).alias(
-                "base"
-            ),
-        )
-    )
     return (
-        local.join(F.broadcast(offsets), "pid")
+        two_phase_scan(d, [F.asc("h"), F.asc("doc_id")], ["n_tokens"])
         .withColumn(
             "tok_before",
-            (F.col("base") + F.col("local_prefix")).cast("bigint"),
+            (F.col("cum_n_tokens") - F.col("n_tokens")).cast("bigint"),
         )
         .filter(F.col("tok_before") < TOKEN_BUDGET)
         .select("doc_id", "n_tokens", "tok_before")

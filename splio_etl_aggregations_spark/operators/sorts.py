@@ -98,47 +98,19 @@ def sort_skyline_pareto(spark, t):
     The oracle states the O(n²) NOT-EXISTS *specification*; the engine
     computes it in O(n log n) shuffle work with NO self-join: group to
     per-price max sizes, take an EXCLUSIVE running max over ascending
-    price via the two-phase pattern (range partition → local exclusive
-    cummax → 16-row per-partition-max offsets frame, same skeleton as
-    ``two_phase_cumsum`` — never a partition-less window over data), and
-    join it back: a part is dominated iff the best size at a strictly
-    lower price already matches it (m< ≥ size) or a same-price part
-    strictly beats it (max_at_price > size). At 100 TB this is two hash
-    exchanges keyed on price; the quadratic form never materializes.
+    price via ``two_phase_scan`` (never a partition-less window over
+    data), and join it back: a part is dominated iff the best size at a
+    strictly lower price already matches it (m< ≥ size) or a same-price
+    part strictly beats it (max_at_price > size). At 100 TB this is two
+    hash exchanges keyed on price; the quadratic form never materializes.
     """
-    from pyspark.sql import Window
+    from .windows import two_phase_scan
 
     parts = t["part"].select("p_partkey", "p_retailprice", "p_size")
     g = parts.groupBy("p_retailprice").agg(F.max("p_size").alias("mx"))
-
-    n_parts = 16
-    ranged = (
-        g.repartitionByRange(n_parts, F.asc("p_retailprice"))
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("p_retailprice")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.withColumn("lmax", F.max("mx").over(w_local))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(F.max("mx").alias("pmax"))
-        .select("pid", F.max("pmax").over(w_off).alias("base"))
-    )
-    cum = (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "p_retailprice",
-            "mx",
-            F.greatest(
-                F.coalesce("lmax", F.lit(None)), F.coalesce("base", F.lit(None))
-            ).alias("m_lt"),
-        )
-    )
+    cum = two_phase_scan(
+        g, [F.asc("p_retailprice")], ["mx"], agg="max", inclusive=False
+    ).withColumnRenamed("cum_mx", "m_lt")
     joined = parts.join(cum, "p_retailprice")
     dominated = (F.col("m_lt") >= F.col("p_size")) | (
         F.col("mx") > F.col("p_size")

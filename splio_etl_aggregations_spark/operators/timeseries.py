@@ -439,12 +439,12 @@ def ts_peak_concurrency(spark, t):
     (delta −1 < +1), so touching sessions never double-count.
 
     The sweep's running sum over ALL boundaries is the scale problem — a
-    plain global window is one task. It rides the two-phase cumulative
-    sum (range partition on the sweep key, local prefix sums, 16-row
-    offset frame), the same machinery as ``corpus_pack_sequences``; the
-    max of a cumulative sum is deterministic under equal-key reordering
-    because equal keys share one sign.
+    plain global window is one task — so it rides ``two_phase_scan``;
+    the max of a cumulative sum is deterministic under equal-key
+    reordering because equal keys share one sign.
     """
+    from .windows import two_phase_scan
+
     us = F.unix_micros(F.col("ts"))
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     e = t["events"].select("user_id", "event_id", us.alias("ts_us"))
@@ -465,31 +465,9 @@ def ts_peak_concurrency(spark, t):
     ).unionByName(
         spans.select(F.col("s_end").alias("ts_us"), F.lit(-1).alias("delta"))
     )
-    # two-phase cumulative sum over the sweep order (ts_us, delta)
-    parts = bounds.repartitionByRange(16, F.asc("ts_us"), F.asc("delta"))
-    # cached so pid comes from ONE materialization of the range exchange
-    # (both window and offsets consume it; see two_phase_global_rank)
-    with_pid = parts.withColumn("pid", F.spark_partition_id()).cache()
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("ts_us", "delta")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = with_pid.withColumn("local_sum", F.sum("delta").over(w_local))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        with_pid.groupBy("pid")
-        .agg(F.sum("delta").alias("part_sum"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("part_sum").over(w_off), F.lit(0)).alias("base"),
-        )
-    )
-    peak = (
-        local.join(F.broadcast(offsets), "pid")
-        .select((F.col("base") + F.col("local_sum")).alias("conc"))
-        .agg(F.max("conc").cast("bigint").alias("peak_concurrency"))
-    )
+    peak = two_phase_scan(
+        bounds, [F.asc("ts_us"), F.asc("delta")], ["delta"]
+    ).agg(F.max("cum_delta").cast("bigint").alias("peak_concurrency"))
     counts = spans.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),
@@ -657,12 +635,12 @@ def ts_cusum_changepoint(spark, t):
     mu = daily.agg(
         F.avg("x").alias("mean_x"), F.count(F.lit(1)).alias("n_days")
     )
-    from .windows import two_phase_cumsum
+    from .windows import two_phase_scan
 
     dev_in = daily.crossJoin(F.broadcast(mu)).select(
         "day", (F.col("x") - F.col("mean_x")).alias("d")
     )
-    cum = two_phase_cumsum(dev_in, [F.asc("day")], ["d"])
+    cum = two_phase_scan(dev_in, [F.asc("day")], ["d"])
     scored = cum.select(
         "day", F.round(F.abs("cum_d"), 4).alias("dev")
     )
@@ -1843,7 +1821,9 @@ def ts_croston_intermittent(spark, t):
         first = acc["z"].isNull()
         return F.struct(
             F.when(first, e["x"].cast("double"))
-            .otherwise(F.lit(0.5) * e["x"] + F.lit(0.5) * acc["z"])
+            .otherwise(
+                F.lit(0.5) * e["x"].cast("double") + F.lit(0.5) * acc["z"]
+            )
             .alias("z"),
             F.when(first, F.lit(1.0))
             .otherwise(

@@ -19,13 +19,32 @@ from ..functions.helpers import r4
 from ..registry import register
 
 
+def _range_pinned(df, order, n_parts: int):
+    """Phase one of every two-phase prefix: range-repartition ``df`` on
+    ``order`` (each partition owns a contiguous key range; partition
+    index follows the global order) and tag each row with its ``pid``.
+
+    CACHED on purpose — correctness, not speed: the local pass and the
+    per-partition aggregate both re-instantiate this subtree in the
+    plan, and if Catalyst does NOT reuse the range exchange the two
+    instances can sample DIFFERENT range boundaries, making pid disagree
+    between them — offsets then attach to the wrong ranges (observed as
+    a run-to-run flaky cumsum in dq_ks_drift before the fix). The cache
+    pins one materialization that every consumer reads.
+    """
+    return (
+        df.repartitionByRange(n_parts, *order)
+        .withColumn("pid", F.spark_partition_id())
+        .cache()
+    )
+
+
 def two_phase_global_rank(df, order, n_parts: int = 16):
     """Distributed global row_number over a total order (``order`` MUST
     end in a unique key) — the scale-safe replacement for a
     partition-less Window, which Spark collapses to ONE task:
 
-    1. range-repartition on the sort key (each partition owns a
-       contiguous key range; partition index follows the global order),
+    1. range-repartition on the sort key (:func:`_range_pinned`),
     2. local row_number within each range partition,
     3. per-partition counts (an ``n_parts``-row aggregate) → cumulative
        offsets, broadcast back; global rank = offset + local rank.
@@ -35,15 +54,7 @@ def two_phase_global_rank(df, order, n_parts: int = 16):
     ``win_percent_cume`` — ntile/percent_rank/cume_dist are pure
     arithmetic over (rn, n_total).
     """
-    parts = df.repartitionByRange(n_parts, *order)
-    # CACHED on purpose — correctness, not speed: both consumers below
-    # (local ranks and per-partition sizes) re-instantiate this subtree
-    # in the plan, and if Catalyst does NOT reuse the range exchange the
-    # two instances can sample DIFFERENT range boundaries, making pid
-    # disagree between them — offsets then attach to the wrong ranges
-    # (observed as a run-to-run flaky cumsum in dq_ks_drift before the
-    # fix). The cache pins one materialization that every consumer reads.
-    with_pid = parts.withColumn("pid", F.spark_partition_id()).cache()
+    with_pid = _range_pinned(df, order, n_parts)
     local = with_pid.withColumn(
         "local_rn",
         F.row_number().over(Window.partitionBy("pid").orderBy(*order)),
@@ -70,13 +81,36 @@ def two_phase_global_rank(df, order, n_parts: int = 16):
     )
 
 
-def two_phase_cumsum(df, order, values, n_parts: int = 16, with_source=False):
-    """Distributed INCLUSIVE prefix sums of ``values`` columns in the
-    total order ``order`` (must end in a unique key) — the companion of
-    :func:`two_phase_global_rank` for running totals: range partition on
-    the sort key, local prefix sums per partition, then an
-    ``n_parts``-row per-partition-total frame gives each partition its
-    base offset. Adds one ``cum_<v>`` column per input value column.
+#: scan aggregate → (column aggregate, null-skipping merge of a
+#: partition's base with a row's local prefix)
+_SCAN_AGGS = {
+    "sum": (F.sum, lambda base, local: F.coalesce(base + local, local, base)),
+    "max": (F.max, F.greatest),
+}
+
+
+def two_phase_scan(
+    df,
+    order,
+    values,
+    agg: str = "sum",
+    inclusive: bool = True,
+    n_parts: int = 16,
+    with_source=False,
+):
+    """Distributed prefix scan of ``values`` columns in the total order
+    ``order`` (must end in a unique key) — the companion of
+    :func:`two_phase_global_rank` for running totals and running maxima,
+    where a partition-less ``SUM()/MAX() OVER (ORDER BY …)`` would
+    collapse the whole frame into one task: range partition on the sort
+    key (:func:`_range_pinned`), local prefix ``agg`` per partition, then
+    an ``n_parts``-row per-partition-``agg`` frame gives each partition
+    its base. Adds one ``cum_<v>`` column per input value column.
+
+    ``agg`` is ``"sum"`` or ``"max"``; ``inclusive=False`` excludes the
+    current row (SQL ``ROWS BETWEEN UNBOUNDED PRECEDING AND 1
+    PRECEDING``: null on the first row). Callers wanting an exclusive
+    SUM that starts at 0 take ``cum_<v> - <v>`` from the inclusive form.
 
     ``with_source=True`` additionally returns the internal CACHED
     range-partitioned frame so callers that also need totals or other
@@ -84,44 +118,31 @@ def two_phase_cumsum(df, order, values, n_parts: int = 16, with_source=False):
     read the one materialization this helper already pays for, instead
     of stacking a second cache layer on their input — the r2→r3
     ``dq_ks_drift`` bench regression was exactly that double cache.
-
-    The same mechanism is inlined (exclusive form) in
-    ``corpus_pack_sequences``; factored here for the CDF-style consumers
-    (``dq_ks_drift``) where a partition-less ``SUM() OVER (ORDER BY …)``
-    would collapse the whole frame into one task.
     """
-    # cached for the same reason as two_phase_global_rank: pid must come
-    # from ONE materialization of the range exchange (see comment there)
-    parts = (
-        df.repartitionByRange(n_parts, *order)
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
+    fn, merge = _SCAN_AGGS[agg]
+    parts = _range_pinned(df, order, n_parts)
     w_local = (
         Window.partitionBy("pid")
         .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
     )
     local = parts.select(
-        "*", *[F.sum(v).over(w_local).alias(f"_lp_{v}") for v in values]
+        "*", *[fn(v).over(w_local).alias(f"_lp_{v}") for v in values]
     )
     w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         parts.groupBy("pid")
-        .agg(*[F.sum(v).alias(f"_pt_{v}") for v in values])
+        .agg(*[fn(v).alias(f"_pt_{v}") for v in values])
         .select(
             "pid",
-            *[
-                F.coalesce(F.sum(f"_pt_{v}").over(w_off), F.lit(0)).alias(
-                    f"_base_{v}"
-                )
-                for v in values
-            ],
+            *[fn(f"_pt_{v}").over(w_off).alias(f"_base_{v}") for v in values],
         )
     )
     out = local.join(F.broadcast(offsets), "pid")
     for v in values:
-        out = out.withColumn(f"cum_{v}", F.col(f"_base_{v}") + F.col(f"_lp_{v}"))
+        out = out.withColumn(
+            f"cum_{v}", merge(F.col(f"_base_{v}"), F.col(f"_lp_{v}"))
+        )
     out = out.drop(
         "pid",
         *[f"_lp_{v}" for v in values],

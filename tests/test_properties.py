@@ -254,27 +254,37 @@ def test_zip_grams_match_python_reference(spark, docs):
                                st.integers(-50, 50)),
                      min_size=1, max_size=40, unique_by=lambda r: r[0]))
 def test_two_phase_cumsum_matches_window(spark, rows):
-    """The distributed prefix sum equals the single-partition window
-    form for every ordering key set (incl. sparse/duplicate values)."""
+    """Every form the distributed prefix scan computes — inclusive sum,
+    exclusive sum (by subtraction), exclusive max (null first row) —
+    equals the single-partition window form for every ordering key set
+    (incl. sparse/duplicate values)."""
     from pyspark.sql import Window
 
     from splio_etl_aggregations_spark.operators.windows import (
-        two_phase_cumsum,
+        two_phase_scan,
     )
 
     df = spark.createDataFrame(rows, "k int, a int, b int")
-    got = {
+    ex_max = {
         r["k"]: (r["cum_a"], r["cum_b"])
-        for r in two_phase_cumsum(df, [F.asc("k")], ["a", "b"]).collect()
+        for r in two_phase_scan(
+            df, [F.asc("k")], ["a", "b"], agg="max", inclusive=False
+        ).collect()
+    }
+    got = {
+        r["k"]: (r["cum_a"], r["cum_b"], r["cum_a"] - r["a"],
+                 r["cum_b"] - r["b"]) + ex_max[r["k"]]
+        for r in two_phase_scan(df, [F.asc("k")], ["a", "b"]).collect()
     }
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
+    w_ex = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
+    cols = [F.sum(c).over(w) for c in "ab"]
+    cols += [F.coalesce(F.sum(c).over(w_ex), F.lit(0)) for c in "ab"]
+    cols += [F.max(c).over(w_ex) for c in "ab"]
     want = {
-        r["k"]: (r["ca"], r["cb"])
-        for r in df.select(
-            "k",
-            F.sum("a").over(w).alias("ca"),
-            F.sum("b").over(w).alias("cb"),
-        ).collect()
+        r[0]: tuple(r[1:])
+        for r in df.select("k", *[c.alias(f"c{i}") for i, c in enumerate(cols)])
+        .collect()
     }
     assert got == want
 
