@@ -23,7 +23,6 @@ still stays ≤ C(n,2) after the groupBy.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from operator import add
 
@@ -34,37 +33,42 @@ from ..functions.helpers import r4
 from ..registry import register
 from .windows import two_phase_global_rank
 
-#: Past this vocabulary size the fixed-width bitmask verify (see
-#: ``_mask_aggs``) would need > 64 mask words per document; the sorted
-#: rank arrays become the honest set representation again and the
-#: prefix join falls back to the array_intersect verify.
+#: Widest vocabulary the bitmask set representation encodes (64 mask
+#: words per document); ``_mask_words`` returns 0 past it and the set
+#: builders hand the verify per-doc element arrays instead.
 _MASK_VOCAB_MAX = 4096
 
-#: Estimated mask-frame size (rows × (8·W + 12) bytes) above which the
+#: Estimated mask-frame size (``_mask_bytes``) above which the
 #: verify sides join WITHOUT the explicit broadcast hint (r9, VERDICT r8
 #: item 3): an explicit ``F.broadcast`` bypasses autoBroadcastJoinThreshold
 #: entirely, so at ~10⁸ docs it would force a multi-GB broadcast into the
 #: 8 GB relation cap / driver heap where a shuffle join is the honest
 #: plan. 256 MB estimated (≤ ~1 GB built, hash-table overhead included)
-#: keeps the hint for any mask frame the driver can plainly hold;
-#: production overrides via env.
-_MASK_BROADCAST_MAX = int(
-    os.environ.get("SPARK_GRAFT_MASK_BROADCAST_MAX", str(256 << 20))
-)
+#: keeps the hint for any mask frame the driver can plainly hold.
+_MASK_BROADCAST_MAX = 256 << 20
+
+
+def _mask_bytes(n_docs: int, n_words: int) -> int:
+    """Estimated size of one mask verify side: ``n_docs`` rows ×
+    (8·W + 12) bytes (doc id, set size and W mask words)."""
+    return n_docs * (8 * n_words + 12)
 
 
 def _mask_hint(side, n_docs: int, n_words: int):
-    """Broadcast-hint a mask verify side only while its estimated size
-    (``n_docs`` rows × (8·W + 12) bytes) stays under
-    ``_MASK_BROADCAST_MAX``; past that, return it unhinted and let the
-    planner pick the join — the verify arithmetic is unchanged."""
-    if n_docs * (8 * n_words + 12) <= _MASK_BROADCAST_MAX:
+    """Broadcast-hint a mask verify side only while ``_mask_bytes``
+    stays under ``_MASK_BROADCAST_MAX``; past that, return it unhinted
+    and let the planner pick the join — the verify arithmetic is
+    unchanged."""
+    if _mask_bytes(n_docs, n_words) <= _MASK_BROADCAST_MAX:
         return F.broadcast(side)
     return side
 
 
 def _mask_words(n_vocab: int) -> int:
-    """Bitmask words (64-bit longs) needed for a dense 1..n_vocab rank space."""
+    """Bitmask words (64-bit longs) needed for a dense 1..n_vocab rank
+    space, or 0 when the vocabulary exceeds ``_MASK_VOCAB_MAX``."""
+    if n_vocab > _MASK_VOCAB_MAX:
+        return 0
     return max(1, -(-int(n_vocab) // 64))
 
 
@@ -87,72 +91,84 @@ def _mask_aggs(n_words: int) -> list:
     ]
 
 
-def _mask_inter(n_words: int, lo: str = "lo_m", hi: str = "hi_m"):
-    """|A∩B| as a codegen popcount sum over the two sides' mask words."""
-    return reduce(
-        add,
-        [
-            F.bit_count(F.col(f"{lo}{k}").bitwiseAND(F.col(f"{hi}{k}")))
-            for k in range(n_words)
-        ],
-    )
-
-
-def _mask_sides(masks, n_words: int, lo_key: str, hi_key: str):
-    """The two aliased verify sides of a (doc_id, n, m0..m{W-1}) mask
-    frame, renamed for a candidate-pair join on (lo_key, hi_key)."""
-    lo = masks.select(
-        F.col("doc_id").alias(lo_key),
-        F.col("n").alias("lo_n"),
-        *[F.col(f"m{k}").alias(f"lo_m{k}") for k in range(n_words)],
-    )
-    hi = masks.select(
-        F.col("doc_id").alias(hi_key),
-        F.col("n").alias("hi_n"),
-        *[F.col(f"m{k}").alias(f"hi_m{k}") for k in range(n_words)],
-    )
-    return lo, hi
-
-
-def _mask_verified_pairs(
-    cand, masks, n_words: int, tau: float, n_docs: int, dedup: bool = True
+def _verified_pairs(
+    cand,
+    sets,
+    n_words: int,
+    n_docs: int,
+    tau: float,
+    keys: tuple[str, str] = ("id_lo", "id_hi"),
+    measure: str = "jaccard",
+    dedup: bool = True,
 ):
-    """EXACT Jaccard verify of a (possibly duplicated) candidate-pair
-    stream against a per-doc bitmask frame; returns DISTINCT
-    (id_lo, id_hi, jaccard[raw double]) at Jaccard ≥ tau — or, with
-    ``dedup=False``, the RAW τ-survivor stream with its candidate
-    multiplicity intact, for consumers whose downstream aggregation
-    absorbs duplicates anyway (the CC min-contraction: r9, measured
-    7.02 s → 6.58 s by deleting the survivor exchange).
+    """EXACT set-overlap verify of a candidate-pair frame ``cand``
+    (columns ``keys``) against a per-doc set frame ``sets``; returns
+    (lo_key, hi_key, measure[raw double]) at measure ≥ tau.
 
-    Plan shape (guide §2.4/§3.1): the mask frame is |docs| ×
-    (8W + 12) bytes — broadcast both verify sides, so the raw candidate
-    stream flows filter-first through two BroadcastHashJoins and a
-    codegen popcount predicate WITHOUT ever being exchanged; only the
-    τ-survivors (output-sized, with small prefix/band multiplicity) pay
-    the distinct. The r7 form distinct-ed the full candidate set first
-    (8.5M rows → 4.1M-pair exchange at sf0.1) and then shuffle-joined
-    sorted rank arrays twice for an array_intersect verify — that
-    exchange and both array joins are deleted. At doc counts where the
-    mask frame outgrows a safe broadcast, ``_mask_hint`` drops the hint
-    (r9 guard — ``n_docs`` × (8W+12) vs ``_MASK_BROADCAST_MAX``) and the
-    verify pays one shuffle attach — the arithmetic is unchanged.
+    ``sets`` is ``(doc_id, n, m0..m{W-1})`` with ``n_words`` = W > 0 —
+    rank bitmasks — or ``(doc_id, n, elems)`` with ``n_words`` = 0 —
+    element arrays, for vocabularies past ``_MASK_VOCAB_MAX``; extra
+    columns are ignored. ``n`` is the exact set size, |A∩B| is
+    computed once as ``inter`` (a popcount sum over the mask words, or
+    ``size(array_intersect)``), and ``measure`` is ``"jaccard"``
+    (inter / (n_lo + n_hi − inter)) or ``"containment"`` (inter /
+    n_lo). Rank-encoding is a bijection and both n's are exact ints,
+    so either int/int division is the same IEEE double as
+    size(intersect) / size(union) resp. / size(lo).
 
-    Exactness: rank-encoding is a bijection, so popcount(A∩B) equals
-    the token-set intersection size; |A∪B| = n_lo + n_hi − inter with
-    both n's exact ints, and the final int/int division is the same
-    IEEE double the array form produced.
+    The two branches treat candidate multiplicity differently, and
+    that is the whole point of the mask form (r8 optimization round,
+    guide §2.4/§3.1):
+
+    - *masks*: the mask frame is |docs| × (8W + 12) bytes, so both
+      sides are broadcast (``_mask_hint`` drops the hint past
+      ``_MASK_BROADCAST_MAX``) and the RAW candidate stream flows
+      filter-first through two BroadcastHashJoins and a codegen
+      popcount predicate without ever being exchanged; a duplicated
+      candidate costs a few codegen ops. Only the τ-survivors pay the
+      distinct — or none with ``dedup=False``, for consumers whose
+      downstream aggregation absorbs duplicates anyway (the CC
+      min-contraction: r9, measured 7.02 s → 6.58 s). The r7 form
+      exchanged the full candidate set first (8.5M rows → 4.1M pairs at
+      sf0.1) before two shuffled array joins.
+    - *arrays*: every candidate copy would carry and intersect two
+      unbounded arrays through unhinted shuffle joins, so the
+      candidates are deduplicated FIRST and each pair is intersected
+      once; the output is then distinct already and needs no second
+      distinct.
     """
-    lo, hi = _mask_sides(masks, n_words, "id_lo", "id_hi")
-    inter = _mask_inter(n_words)
-    jac = inter / (F.col("lo_n") + F.col("hi_n") - inter)
-    survivors = (
-        cand.join(_mask_hint(lo, n_docs, n_words), "id_lo")
-        .join(_mask_hint(hi, n_docs, n_words), "id_hi")
-        .filter(jac >= tau)
-        .select("id_lo", "id_hi", jac.alias("jaccard"))
+    lo_key, hi_key = keys
+
+    def side(p, key, cols):
+        return sets.select(
+            F.col("doc_id").alias(key),
+            F.col("n").alias(f"{p}_n"),
+            *[F.col(c).alias(f"{p}_{c}") for c in cols],
+        )
+
+    if n_words:
+        cols = [f"m{k}" for k in range(n_words)]
+        lo = _mask_hint(side("lo", lo_key, cols), n_docs, n_words)
+        hi = _mask_hint(side("hi", hi_key, cols), n_docs, n_words)
+        inter = reduce(
+            add,
+            [F.bit_count(F.col(f"lo_{c}").bitwiseAND(F.col(f"hi_{c}"))) for c in cols],
+        )
+    else:
+        lo, hi = side("lo", lo_key, ["elems"]), side("hi", hi_key, ["elems"])
+        inter = F.size(F.array_intersect("lo_elems", "hi_elems"))
+        cand, dedup = cand.distinct(), False
+    if measure == "jaccard":
+        score = inter / (F.col("lo_n") + F.col("hi_n") - inter)
+    else:
+        score = inter / F.col("lo_n")
+    out = (
+        cand.join(lo, lo_key)
+        .join(hi, hi_key)
+        .filter(score >= tau)
+        .select(lo_key, hi_key, score.alias(measure))
     )
-    return survivors.distinct() if dedup else survivors
+    return out.distinct() if dedup else out
 
 
 @register(
@@ -230,19 +246,19 @@ def _ranked_sets(items):
     per-doc sorted int-rank arrays (added r6 so the bigram-shingle join
     shares the prefix-filter machinery).
 
-    Returns ``(frame, n_words, n_docs)``: the frame carries each doc's
-    sorted rank array ``ord`` (feeds the prefix slice) and, when the
-    vocabulary is mask-encodable (≤ ``_MASK_VOCAB_MAX``), the n_words
-    bitmask words ``m0..m{W-1}`` folded in the SAME aggregation pass —
-    the verify-side set representation that replaces array_intersect
-    with codegen popcounts (r8 optimization round; guide §1.2 step 1).
-    ``n_words`` is 0 when the vocabulary is too wide to mask, and
-    callers fall back to the array verify. ``n_docs`` (distinct doc
-    count = the mask frame's row count) rides the SAME one-job
-    aggregate as the vocabulary count — it feeds the r9 broadcast-size
-    guard (``_mask_hint``) at zero extra actions; the two-scalar
-    aggregate is driver-side by construction (one row out of the
-    element stream)."""
+    Returns ``(frame, n_words, n_docs)``, the frame CACHED: it carries
+    each doc's sorted rank array ``elems`` (feeds the prefix slice and
+    the array verify) and, when the vocabulary is mask-encodable
+    (``_mask_words`` > 0), the n_words bitmask words ``m0..m{W-1}``
+    folded in the SAME aggregation pass — the verify-side set
+    representation that replaces array_intersect with codegen popcounts
+    (r8 optimization round; guide §1.2 step 1). ``n_words`` is 0 when
+    the vocabulary is too wide to mask, and ``_verified_pairs`` takes
+    its array branch. ``n_docs`` (distinct doc count = the mask frame's
+    row count) rides the SAME one-job aggregate as the vocabulary count
+    — it feeds the r9 broadcast-size guard (``_mask_hint``) at zero
+    extra actions; the two-scalar aggregate is driver-side by
+    construction (one row out of the element stream)."""
     dfreq = items.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     rank = two_phase_global_rank(dfreq, [F.asc("df"), F.asc("token")]).select(
         "token", F.col("rn").cast("int").alias("r")
@@ -250,7 +266,7 @@ def _ranked_sets(items):
     n_vocab, n_docs = items.select(
         F.countDistinct("token"), F.countDistinct("doc_id")
     ).first()
-    n_words = _mask_words(n_vocab) if n_vocab <= _MASK_VOCAB_MAX else 0
+    n_words = _mask_words(n_vocab)
     ranked = items.join(F.broadcast(rank), "token")
     # Deliberately NOT checkpointed (measured in the r8 optimization
     # round): a checkpoint here erases the frame's statistics, and the
@@ -258,17 +274,20 @@ def _ranked_sets(items):
     # broadcast hash join to a sort-merge join on the
     # ~vocabulary-cardinality rank key — the bigram rung measured 6.6 s
     # (recompute, broadcast plan) vs 25.5 s (checkpoint, SMJ plan).
-    # Multi-consumer reuse is the CALLERS' call: both consumers
-    # (_prefix_filtered_pairs, dedup_containment) cache() the returned
-    # frame — an InMemoryRelation keeps the child's statistics, so the
-    # broadcast plan survives while the token-scan + rank subtree
-    # computes once per execution (r9; measured 3.67 s → 2.53 s on the
-    # τ=0.9 pair frame).
+    # Cached instead: both consumers (_prefix_filtered_pairs,
+    # dedup_containment) read the frame three or four times (prefix or
+    # probe explode, index, both verify sides), and an InMemoryRelation
+    # keeps the child's statistics, so the broadcast plan survives while
+    # the token-scan + rank subtree computes once per execution (r9;
+    # measured 3.67 s → 2.53 s on the τ=0.9 pair frame; 2.7 s vs 19 s
+    # against the checkpoint on dedup_containment).
     return (
-        ranked.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list("r")).alias("ord"),
+        ranked.groupBy("doc_id")
+        .agg(
+            F.sort_array(F.collect_list("r")).alias("elems"),
             *_mask_aggs(n_words),
-        ),
+        )
+        .cache(),
         n_words,
         n_docs,
     )
@@ -295,7 +314,8 @@ def _near_dup_pairs(t, tau: float = 0.9, dedup: bool = True):
     - *Length filter*: J ≤ min(|A|,|B|)/max(|A|,|B|), so candidates with
       min < τ·max are dropped inside the join condition.
 
-    Candidates then get one exact verify (array_intersect/array_union),
+    Candidates then get one exact verify (``_verified_pairs``: rank
+    bitmask popcounts, or array_intersect past ``_MASK_VOCAB_MAX``),
     and the ≥ τ comparison is an IEEE-identical double division on both
     engines. At 100 TB the shuffle key is the (rare) prefix token and the
     df table joined in for ordering is vocabulary-sized — broadcastable.
@@ -305,36 +325,23 @@ def _near_dup_pairs(t, tau: float = 0.9, dedup: bool = True):
 
 def _prefix_filtered_pairs(ranked, tau: float, dedup: bool = True):
     """PPJoin-family prefix+length-filtered exact similarity join over
-    a ``_ranked_sets`` result; returns DISTINCT (id_lo, id_hi,
-    jaccard[raw double]) at Jaccard ≥ tau (factored out in r6 so the
-    bigram-shingle variant reuses it at τ=0.6).
+    a ``_ranked_sets`` result; returns (id_lo, id_hi, jaccard[raw
+    double]) at Jaccard ≥ tau, distinct unless ``dedup=False`` (factored
+    out in r6 so the bigram-shingle variant reuses it at τ=0.6).
 
-    r8 optimization-round restructure (guide §2.4 — remove shuffles
-    outright): the raw prefix-join output flows STRAIGHT into the
-    bitmask verify with its per-shared-prefix-rank multiplicity — no
-    ``.distinct()`` on the candidate side. The verify is two broadcast
-    joins + popcounts, so duplicated candidates cost a few codegen ops
-    each, while the old plan paid a full exchange to dedupe 8.5M raw
-    rows into 4.1M candidates and then shuffle-joined rank arrays
-    twice (measured at sf0.1: bigram rung 48.8 s → the mask form;
-    token rung 16.4 s likewise). Only τ-survivors reach the distinct.
+    The raw prefix-join output, one row per shared prefix rank, goes
+    straight to ``_verified_pairs``, which decides whether the
+    candidate multiplicity is kept (mask branch) or removed first
+    (array branch).
     """
     tokr, n_words, n_docs = ranked
-    # three consumers (prefix explode + both verify sides): cache so the
-    # token-scan + rank subtree computes once per execution instead of
-    # being re-expanded per consumer — the dedup_containment lesson
-    # applied here in r9 (measured, interleaved A/B with clearCache
-    # between runs: 3.67 s → 2.53 s median for the τ=0.9 pair frame).
-    # cache, NOT localCheckpoint: an InMemoryRelation keeps the child's
-    # statistics, so the prefix self-join stays a broadcast join (the
-    # r8-measured checkpoint variant degraded it to sort-merge).
-    tokr = tokr.cache()
-    n = F.size("ord")
+    sets = tokr.withColumn("n", F.size("elems"))
+    n = F.col("n")
     prefix_len = (n - F.ceil(n * F.lit(tau)).cast("int") + 1).cast("int")
-    prefix = tokr.select(
+    prefix = sets.select(
         "doc_id",
-        n.alias("n"),
-        F.explode(F.slice("ord", F.lit(1), prefix_len)).alias("r"),
+        "n",
+        F.explode(F.slice("elems", F.lit(1), prefix_len)).alias("r"),
     )
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = a.join(
@@ -346,27 +353,7 @@ def _prefix_filtered_pairs(ranked, tau: float, dedup: bool = True):
             >= F.lit(tau) * F.greatest(F.col("a.n"), F.col("b.n"))
         ),
     ).select(F.col("a.doc_id").alias("id_lo"), F.col("b.doc_id").alias("id_hi"))
-    if n_words:
-        masks = tokr.select(
-            "doc_id", n.alias("n"), *[f"m{k}" for k in range(n_words)]
-        )
-        return _mask_verified_pairs(cand, masks, n_words, tau, n_docs, dedup=dedup)
-    # vocabulary too wide to mask: the r7 array-verify path (candidate
-    # distinct first, then one exact array_intersect per candidate)
-    cand = cand.distinct()
-    lo = tokr.select(F.col("doc_id").alias("id_lo"), F.col("ord").alias("ord_lo"))
-    hi = tokr.select(F.col("doc_id").alias("id_hi"), F.col("ord").alias("ord_hi"))
-    # rank encoding is a bijection on tokens, so rank-set intersection
-    # size == token-set intersection size — the verify stays exact
-    jac = F.size(F.array_intersect("ord_lo", "ord_hi")) / F.size(
-        F.array_union("ord_lo", "ord_hi")
-    )
-    return (
-        cand.join(lo, "id_lo")
-        .join(hi, "id_hi")
-        .filter(jac >= tau)
-        .select("id_lo", "id_hi", jac.alias("jaccard"))
-    )
+    return _verified_pairs(cand, sets, n_words, n_docs, tau, dedup=dedup)
 
 
 @register("dedup_near_jaccard", oracle=_JACCARD_ORACLE, tier="P1")
@@ -454,11 +441,13 @@ def _gram_masks(grams_rows):
     the ``_MASK_VOCAB_MAX`` guard) vocabulary replaces the two-phase
     global rank's cache + range-exchange + offsets machinery — then
     fold ranks into ``n`` + ``m0..m{W-1}`` in one wide aggregation
-    pass. Returns ``(frame, n_words, n_docs)``; ``(None, 0, 0)`` when
-    the vocabulary exceeds ``_MASK_VOCAB_MAX`` and callers must fall
-    back to collect_set gram arrays. ``n_docs`` rides the same one-job
-    aggregate as the vocabulary count (r9 broadcast-guard input). The
-    rank table is vocabulary-sized — broadcastable by construction.
+    pass. Returns ``(frame, n_words, n_docs)`` in ``_verified_pairs``'s
+    set contract: ``(doc_id, n, m0..m{W-1})``, or — when
+    ``_mask_words`` is 0 (vocabulary past ``_MASK_VOCAB_MAX``) —
+    ``(doc_id, n, elems)`` with ``elems`` the doc's ``collect_set``
+    gram array. ``n_docs`` rides the same one-job aggregate as the
+    vocabulary count (r9 broadcast-guard input). The rank table is
+    vocabulary-sized — broadcastable by construction.
 
     Deliberately NOT checkpointed (measured, interleaved A/B under the
     nightly contention window): the eager repartition+localCheckpoint
@@ -467,14 +456,16 @@ def _gram_masks(grams_rows):
     driver-blocking jobs — while each broadcast verify side recomputes
     this subtree with codegen in ~0.3 s (near_minhash medians: 8.9 s
     checkpointed vs 7.3 s recomputed)."""
-    vocab = grams_rows.select("gram").distinct()
     n_vocab, n_docs = grams_rows.select(
         F.countDistinct("gram"), F.countDistinct("doc_id")
     ).first()
-    if n_vocab > _MASK_VOCAB_MAX:
-        return None, 0, 0
     n_words = _mask_words(n_vocab)
-    rank = vocab.select(
+    if not n_words:
+        sets = grams_rows.groupBy("doc_id").agg(
+            F.collect_set("gram").alias("elems")
+        )
+        return sets.select("doc_id", F.size("elems").alias("n"), "elems"), 0, n_docs
+    rank = grams_rows.select("gram").distinct().select(
         "gram",
         F.row_number().over(W.orderBy("gram")).cast("int").alias("r"),
     )
@@ -592,46 +583,20 @@ def dedup_near_minhash(spark, t):
     l = bands_long.alias("l")
     r = bands_long.alias("r")
     # Raw band matches — one row per agreeing band per pair, NOT
-    # distinct-ed (r8 optimization round, guide §2.4): the exact verify
-    # below is two broadcast mask joins + popcounts, so a true pair's
-    # ≤32-band multiplicity costs a handful of codegen ops per copy,
-    # while the old plan paid a full exchange to dedupe the candidate
-    # set and then routed it with ~51-string gram arrays through two
-    # sort-merge shuffles (array payload was the shuffle; measured
-    # 17.2 s warm at sf0.1). Only τ-survivors reach the distinct.
+    # distinct-ed (r8 optimization round, guide §2.4): on the verify's
+    # mask branch a true pair's ≤32-band multiplicity costs a handful of
+    # codegen ops per copy, while the old plan paid a full exchange to
+    # dedupe the candidate set and then routed it with ~51-string gram
+    # arrays through two sort-merge shuffles (array payload was the
+    # shuffle; measured 17.2 s warm at sf0.1).
     candidates = l.join(
         r,
         (F.col("l.band_id") == F.col("r.band_id"))
         & (F.col("l.bucket") == F.col("r.bucket"))
         & (F.col("l.doc_id") < F.col("r.doc_id")),
     ).select(F.col("l.doc_id").alias("id_lo"), F.col("r.doc_id").alias("id_hi"))
-    # Exact verification of candidates only (shingle-set intersection,
-    # rank-bitmask encoded — popcount(A∩B) is exactly |A∩B|).
-    masks, n_words, n_docs = _gram_masks(grams_rows)
-    if n_words:
-        verified = _mask_verified_pairs(candidates, masks, n_words, 0.6, n_docs)
-    else:
-        # vocabulary too wide to mask: dedupe candidates, then one
-        # exact array verify per candidate (the r7 plan)
-        gram_sets = grams_rows.groupBy("doc_id").agg(
-            F.collect_set("gram").alias("grams")
-        )
-        lo = gram_sets.select(
-            F.col("doc_id").alias("id_lo"), F.col("grams").alias("grams_lo")
-        )
-        hi = gram_sets.select(
-            F.col("doc_id").alias("id_hi"), F.col("grams").alias("grams_hi")
-        )
-        jac = F.size(F.array_intersect("grams_lo", "grams_hi")) / F.size(
-            F.array_union("grams_lo", "grams_hi")
-        )
-        verified = (
-            candidates.distinct()
-            .join(lo, "id_lo")
-            .join(hi, "id_hi")
-            .filter(jac >= 0.6)
-            .select("id_lo", "id_hi", jac.alias("jaccard"))
-        )
+    # Exact verification of candidates only (shingle-set intersection).
+    verified = _verified_pairs(candidates, *_gram_masks(grams_rows), 0.6)
     return verified.select("id_lo", "id_hi", r4(F.col("jaccard")).alias("jaccard"))
 
 
@@ -1415,7 +1380,8 @@ def dedup_containment(spark, t):
     crawl-corpus pipelines lose if they only run symmetric measures.
 
     EXACT, not sketched: candidates come from a rare-token prefix
-    inverted-index join and are then verified on the full rank arrays.
+    inverted-index join and are then verified on the full token sets
+    (``_verified_pairs``).
     The prefix filter for containment is one-sided — only the probing
     (contained) side may be pruned to its ⌊(1−τ)·n⌋+1 rarest tokens
     (any B holding ≥ τ·n of A's tokens must hit that prefix — pigeonhole
@@ -1435,28 +1401,21 @@ def dedup_containment(spark, t):
     docs" filter actually consumes.
     """
     tau = 0.9
-    # four consumers (probe, index, and both verify sides): cache so the
-    # token-scan + rank subtree computes once instead of being
-    # re-expanded per consumer (the dedup_near_jaccard 4× lesson; cache
-    # over localCheckpoint because an InMemoryRelation KEEPS the child's
-    # statistics — a checkpoint erases them and the candidate join
-    # degrades to sort-merge, measured 2.7 s → 19 s on this op)
     tokr, n_words, n_docs = _ranked_token_sets(t)
-    tokr = tokr.cache()
-    n = F.size("ord")
-    sz = tokr.select("doc_id", n.alias("n"), F.col("ord"))
+    sz = tokr.withColumn("n", F.size("elems"))
+    n = F.col("n")
     # one-sided prefix: probe (contained) docs expose only their rarest
     # floor((1-tau)*n)+1 ranks; containers post every rank
     probe_len = (n - F.ceil(n * F.lit(tau)).cast("int") + 1).cast("int")
     probe = sz.select(
         F.col("doc_id").alias("id_a"),
         F.col("n").alias("n_a"),
-        F.explode(F.slice("ord", F.lit(1), probe_len)).alias("r_a"),
+        F.explode(F.slice("elems", F.lit(1), probe_len)).alias("r_a"),
     )
     index = sz.select(
         F.col("doc_id").alias("id_b"),
         F.col("n").alias("n_b"),
-        F.explode("ord").alias("r_b"),
+        F.explode("elems").alias("r_b"),
     )
     cand = probe.join(
         index,
@@ -1467,38 +1426,9 @@ def dedup_containment(spark, t):
             | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
         ),
     ).select("id_a", "id_b")
-    if n_words:
-        # r8 optimization round: raw candidates (multiplicity = shared
-        # probe-prefix ranks, ≤ ⌊0.1·n⌋+1) flow filter-first through two
-        # broadcast mask joins + a popcount containment predicate; the
-        # full-candidate ``.distinct()`` exchange and both array-verify
-        # shuffle joins are deleted — only ≥τ survivors are deduped
-        # before the container count (same pair set either way).
-        masks = tokr.select(
-            "doc_id", n.alias("n"), *[f"m{k}" for k in range(n_words)]
-        )
-        lo, hi = _mask_sides(masks, n_words, "id_a", "id_b")
-        containment = _mask_inter(n_words) / F.col("lo_n")
-        verified = (
-            cand.join(_mask_hint(lo, n_docs, n_words), "id_a")
-            .join(_mask_hint(hi, n_docs, n_words), "id_b")
-            .filter(containment >= tau)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    else:
-        cand = cand.distinct()
-        av = sz.select(F.col("doc_id").alias("id_a"), F.col("ord").alias("ord_a"))
-        bv = sz.select(F.col("doc_id").alias("id_b"), F.col("ord").alias("ord_b"))
-        containment = F.size(F.array_intersect("ord_a", "ord_b")) / F.size(
-            "ord_a"
-        )
-        verified = (
-            cand.join(av, "id_a")
-            .join(bv, "id_b")
-            .filter(containment >= tau)
-            .select("id_a", "id_b")
-        )
+    verified = _verified_pairs(
+        cand, sz, n_words, n_docs, tau, ("id_a", "id_b"), "containment"
+    )
     return verified.groupBy(F.col("id_a").alias("contained_id")).agg(
         F.count(F.lit(1)).alias("n_containers"),
         F.min("id_b").alias("keeper_id"),

@@ -56,8 +56,7 @@ def test_oracle_output_types_driver_safe(duck, name):
     )
 
 
-@pytest.mark.parametrize("name", _ORACLE_IDS)
-def test_oracle_match(spark, duck, name):
+def _assert_oracle_match(spark, duck, name):
     q = _QUERIES[name]
     register_duck_views(duck, _SF)
     df = q.run(spark, _SF)
@@ -92,6 +91,34 @@ def test_oracle_match(spark, duck, name):
         "vacuous; re-derive the predicate from the data or whitelist "
         "with a reason"
     )
+
+
+@pytest.mark.parametrize("name", _ORACLE_IDS)
+def test_oracle_match(spark, duck, name):
+    _assert_oracle_match(spark, duck, name)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_near_jaccard",
+        "dedup_ngram_jaccard",
+        "dedup_near_minhash",
+        "dedup_containment",
+        "dedup_connected_components",
+        "pipeline_clean_corpus",
+    ],
+)
+def test_oracle_match_array_verify(spark, duck, monkeypatch, name):
+    """The exact set-overlap verify's array branch — the one any real
+    vocabulary past ``_MASK_VOCAB_MAX`` takes, while every fixture
+    vocabulary (≤ 961 grams) takes the mask branch — forced on for
+    every operator that routes through it."""
+    from splio_etl_aggregations_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_MASK_VOCAB_MAX", 0)
+    assert dedup._mask_words(1) == 0
+    _assert_oracle_match(spark, duck, name)
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY_IDS)

@@ -289,19 +289,17 @@ def test_two_phase_cumsum_matches_window(spark, rows):
     assert got == want
 
 
-@SLOW
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from("abcdefg"), min_size=1, max_size=8).map(
-            lambda toks: " ".join(toks)
-        ),
-        min_size=2,
-        max_size=10,
-    )
+_CONTAINMENT_DOCS = st.lists(
+    st.lists(st.sampled_from("abcdefg"), min_size=1, max_size=8).map(
+        lambda toks: " ".join(toks)
+    ),
+    min_size=2,
+    max_size=10,
 )
-def test_containment_matches_bruteforce(spark, docs):
-    """dedup_containment's survivorship report equals the brute-force
-    all-pairs computation on arbitrary tiny corpora."""
+
+
+def _check_containment_bruteforce(spark, docs):
+    """dedup_containment's report must equal the all-pairs brute force."""
     from splio_etl_aggregations_spark.operators.dedup import (
         dedup_containment,
     )
@@ -327,6 +325,25 @@ def test_containment_matches_bruteforce(spark, docs):
         if containers:
             want[a] = (len(containers), min(containers))
     assert got == want
+
+
+@SLOW
+@given(docs=_CONTAINMENT_DOCS)
+def test_containment_matches_bruteforce(spark, docs):
+    """dedup_containment's survivorship report equals the brute-force
+    all-pairs computation on arbitrary tiny corpora (bitmask verify)."""
+    _check_containment_bruteforce(spark, docs)
+
+
+@SLOW
+@given(docs=_CONTAINMENT_DOCS)
+def test_containment_matches_bruteforce_array_verify(spark, monkeypatch, docs):
+    """Same brute-force equality on the array_intersect branch of the
+    exact verify, forced by a 0 vocabulary bound."""
+    from splio_etl_aggregations_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_MASK_VOCAB_MAX", 0)
+    _check_containment_bruteforce(spark, docs)
 
 
 # ------------------------------------------------- lake model-based test

@@ -3268,18 +3268,25 @@ def test_mask_hint_falls_back_past_size_bound(spark, monkeypatch):
         [(1, 2), (1, 2), (1, 3), (2, 3)], "id_lo long, id_hi long"
     )
 
-    # under the bound: hint fires (identity check + plan hint node)
-    side, _ = dd._mask_sides(masks, 1, "id_lo", "id_hi")
-    hinted = dd._mask_hint(side, n_docs=3, n_words=1)
-    assert hinted is not side
-    assert (
-        "ResolvedHint (strategy=broadcast)"
-        in hinted._jdf.queryExecution().analyzed().toString()
-    )
+    def hints(frame):
+        return frame._jdf.queryExecution().analyzed().toString().count(
+            "ResolvedHint (strategy=broadcast)"
+        )
 
-    # past the bound: no hint — the exact frame comes back
+    # under the bound: hint fires (identity check + plan hint node), and
+    # the verify hints both of its sides
+    hinted = dd._mask_hint(masks, n_docs=3, n_words=1)
+    assert hinted is not masks
+    assert hints(hinted) == 1
+    fast = dd._verified_pairs(cand, masks, 1, 3, 0.5)
+    assert hints(fast) == 2
+
+    # past the bound: no hint — the exact frame comes back, and the
+    # verify joins unhinted sides
     monkeypatch.setattr(dd, "_MASK_BROADCAST_MAX", 10)
-    assert dd._mask_hint(side, n_docs=3, n_words=1) is side
+    assert dd._mask_hint(masks, n_docs=3, n_words=1) is masks
+    slow = dd._verified_pairs(cand, masks, 1, 3, 0.5)
+    assert hints(slow) == 0
 
     # both regimes verify to the identical pair set
     def pairs(frame):
@@ -3288,10 +3295,6 @@ def test_mask_hint_falls_back_past_size_bound(spark, monkeypatch):
             for r in frame.collect()
         )
 
-    monkeypatch.setattr(dd, "_MASK_BROADCAST_MAX", 256 << 20)
-    fast = pairs(dd._mask_verified_pairs(cand, masks, 1, 0.5, n_docs=3))
-    monkeypatch.setattr(dd, "_MASK_BROADCAST_MAX", 10)
-    slow = pairs(dd._mask_verified_pairs(cand, masks, 1, 0.5, n_docs=3))
     # hand check: docs 1={r1,r2}, 2={r2,r3}, 3={r3}; J(1,2)=1/3 <0.5,
     # J(1,3)=0, J(2,3)=1/2 >=0.5 -> only (2,3) survives
-    assert fast == slow == [(2, 3, 0.5)]
+    assert pairs(fast) == pairs(slow) == [(2, 3, 0.5)]

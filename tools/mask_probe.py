@@ -10,7 +10,8 @@ scale risk the r9 size guard (`_mask_hint`) bounds. This probe
 measures exactly that side at each K, without the quadratic pair join:
 
   * n_docs / n_vocab / mask words,
-  * the guard's size estimate n_docs x (8W + 12) and its decision,
+  * the guard's size estimate (`_mask_bytes`: n_docs x (8W + 12)) and
+    its decision (`_mask_hint`),
   * wall time to materialize the mask frame (token rung: the
     `_ranked_sets` aggregate of dedup_near_jaccard/ngram; gram rung:
     `_gram_masks` of dedup_near_minhash) via a noop sink.
@@ -52,13 +53,11 @@ def probe(spark, t):
     t0 = time.perf_counter()
     frame, n_words, n_docs = dd._ranked_sets(tok)
     masks = frame.select(
-        "doc_id", F.size("ord").alias("n"), *[f"m{k}" for k in range(n_words)]
+        "doc_id", F.size("elems").alias("n"), *[f"m{k}" for k in range(n_words)]
     )
     noop(masks)
     wall = time.perf_counter() - t0
-    est = n_docs * (8 * n_words + 12)
-    out.append(("token(_ranked_sets)", n_docs, n_words, est,
-                est <= dd._MASK_BROADCAST_MAX, wall))
+    out.append(("token(_ranked_sets)", n_docs, n_words, masks, wall))
     # gram rung (dedup_near_minhash)
     toks = F.split(F.col("text"), " ")
     grams_rows = (
@@ -70,11 +69,14 @@ def probe(spark, t):
     gmasks, gw, gd = dd._gram_masks(grams_rows)
     noop(gmasks)
     wall = time.perf_counter() - t0
-    est = gd * (8 * gw + 12)
-    out.append(("gram(_gram_masks)", gd, gw, est,
-                est <= dd._MASK_BROADCAST_MAX, wall))
+    out.append(("gram(_gram_masks)", gd, gw, gmasks, wall))
     spark.catalog.clearCache()
-    return out
+    # the guard's own estimate and decision, not a re-derivation
+    return [
+        (rung, nd, w, dd._mask_bytes(nd, w),
+         dd._mask_hint(m, nd, w) is not m, wall)
+        for rung, nd, w, m, wall in out
+    ]
 
 
 def main() -> None:
