@@ -25,7 +25,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.portable_hash import ph60, ph60_sql
@@ -54,8 +54,8 @@ def _zip_grams(toks: Column, n: int) -> Column:
     plain codegen expressions. (A ``transform``-over-``sequence`` build
     evaluates interpreted — measured 23x slower; see
     ``text_rep_ngram_filter``.) Callers must pre-filter docs shorter
-    than ``n`` tokens: below that the slice length goes non-positive and
-    the zip is empty-or-junk."""
+    than ``n`` tokens, as :func:`_gram_rows` does: below that the slice
+    length goes non-positive and the zip is empty-or-junk."""
     sz = F.size(toks) - (n - 1)
     return F.arrays_zip(
         *[F.slice(toks, i + 1, sz).alias(f"w{i}") for i in range(n)]
@@ -66,6 +66,19 @@ def _gram_str(n: int, field: str = "t") -> Column:
     """Join one exploded :func:`_zip_grams` struct back into the
     space-separated n-gram string."""
     return F.concat_ws(" ", *[f"{field}.w{i}" for i in range(n)])
+
+
+def _gram_rows(docs: DataFrame, n: int) -> DataFrame:
+    """``(doc_id, gram)``: one row per n-gram occurrence (duplicates
+    kept) of each doc's space-split ``text``, docs shorter than ``n``
+    tokens filtered out first — the one home of the zip-gram explode
+    for callers that need no position or extra column."""
+    toks = _toks()
+    return (
+        docs.filter(F.size(toks) >= n)
+        .select("doc_id", F.explode(_zip_grams(toks, n)).alias("t"))
+        .select("doc_id", _gram_str(n).alias("gram"))
+    )
 
 
 @register(
@@ -163,15 +176,8 @@ def text_rep_ngram_filter(spark, t):
     compare the ROUNDED fractions so both engines make the same
     boundary call.
     """
-    toks = _toks()
-
     def gram_stats(n: int):
-        ex = (
-            t["documents"]
-            .filter(F.size(toks) >= n)
-            .select("doc_id", F.explode(_zip_grams(toks, n)).alias("t"))
-            .select("doc_id", _gram_str(n).alias("g"))
-        )
+        ex = _gram_rows(t["documents"], n).withColumnRenamed("gram", "g")
         return (
             ex.groupBy("doc_id", "g")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -423,10 +429,8 @@ def corpus_quality_ablation(spark, t):
     toks = _toks()
     n_tok = F.size(toks)
     g2 = (
-        t["documents"]
-        .filter(n_tok >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("g"))
+        _gram_rows(t["documents"], 2)
+        .withColumnRenamed("gram", "g")
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
@@ -521,12 +525,9 @@ def corpus_ngram_novelty(spark, t):
     A deterministic total order (doc_id) makes the result exact and
     reproducible — no dependence on partition layout.
     """
-    docs = t["documents"]
-    toks = _toks()
     bigd = (
-        docs.filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("bigram"))
+        _gram_rows(t["documents"], 2)
+        .withColumnRenamed("gram", "bigram")
         .distinct()
     )
     firsts = bigd.groupBy("bigram").agg(F.min("doc_id").alias("first_doc"))
@@ -1255,15 +1256,7 @@ def corpus_boilerplate_phrases(spark, t):
     min(gram) as the display representative (the contamination op's
     hash-seam pattern), a one-line change documented here.
     """
-    toks = _toks()
-    occ = (
-        t["documents"]
-        .filter(F.size(toks) >= 8)
-        .select(
-            "doc_id", F.explode(_zip_grams(toks, 8)).alias("t")
-        )
-        .select("doc_id", _gram_str(8).alias("gram"))
-    )
+    occ = _gram_rows(t["documents"], 8)
     agg = occ.groupBy("gram").agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
         F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),

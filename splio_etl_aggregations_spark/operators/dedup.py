@@ -30,7 +30,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.helpers import r4
+from ..functions.portable_hash import ph60
 from ..registry import register
+from .corpus import _gram_rows
 from .windows import two_phase_global_rank
 
 #: Widest vocabulary the bitmask set representation encodes (64 mask
@@ -102,8 +104,9 @@ def _verified_pairs(
     dedup: bool = True,
 ):
     """EXACT set-overlap verify of a candidate-pair frame ``cand``
-    (columns ``keys``) against a per-doc set frame ``sets``; returns
-    (lo_key, hi_key, measure[raw double]) at measure ≥ tau.
+    (keyed ``keys``; other columns are ignored) against a per-doc set
+    frame ``sets``; returns (lo_key, hi_key, measure[raw double]) at
+    measure ≥ tau.
 
     ``sets`` is ``(doc_id, n, m0..m{W-1})`` with ``n_words`` = W > 0 —
     rank bitmasks — or ``(doc_id, n, elems)`` with ``n_words`` = 0 —
@@ -157,7 +160,7 @@ def _verified_pairs(
     else:
         lo, hi = side("lo", lo_key, ["elems"]), side("hi", hi_key, ["elems"])
         inter = F.size(F.array_intersect("lo_elems", "hi_elems"))
-        cand, dedup = cand.distinct(), False
+        cand, dedup = cand.select(*keys).distinct(), False
     if measure == "jaccard":
         score = inter / (F.col("lo_n") + F.col("hi_n") - inter)
     else:
@@ -413,9 +416,6 @@ def dedup_ngram_jaccard(spark, t):
     (same output set, LSH-banded candidates, ~3× faster here and
     asymptotically better everywhere).
     """
-    from .corpus import _gram_str, _zip_grams
-
-    toks = F.split(F.col("text"), " ")
     # distinct (doc, shingle) rows via explode + DISTINCT: the zip-gram
     # build is plain codegen, where the per-row
     # array_distinct(transform(...)) form it replaced evaluates
@@ -423,10 +423,8 @@ def dedup_ngram_jaccard(spark, t):
     # distinct is one exchange on rows the downstream inverted-index
     # join reshuffles anyway.
     g = (
-        t["documents"]
-        .filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("token"))
+        _gram_rows(t["documents"], 2)
+        .withColumnRenamed("gram", "token")
         .distinct()
     )
     p = _prefix_filtered_pairs(_ranked_sets(g), 0.6)
@@ -493,15 +491,167 @@ def _gram_masks(grams_rows):
     )
 
 
+#: The MinHash family the three LSH operators share — 64 Mersenne-prime
+#: (2³¹−1) universal hashes (a·x + b) mod p of the portable shingle hash
+#: ``ph60(gram, "mhs") mod p``. Unlike pyspark.ml's MinHashLSH (random
+#: coefficients per fit) the family is fixed, so results are
+#: reproducible run-to-run, and md5-based ph60 lets DuckDB recompute the
+#: signatures bit-identically — the band sweep's and error curve's
+#: oracles hash-check candidate COUNTS, not just verified survivors. The
+#: 31-bit domain keeps a·x + b under 2⁶³: no bigint overflow under ANSI
+#: mode (Spark 4 default raises on silent wraparound).
+_MH_PRIME = (1 << 31) - 1
+_MH_A = [((2 * i + 1) * 0x9E3779B9) % _MH_PRIME for i in range(64)]
+_MH_B = [((i * i + 7) * 0x27D4EB4F) % _MH_PRIME for i in range(64)]
+
+
+def _minhash_signatures(grams_rows):
+    """``(doc_id, w0..w63)``: each doc's 64-slot MinHash signature over
+    a RAW ``(doc_id, gram)`` stream — min() is duplicate-insensitive, so
+    repeated shingles need no distinct.
+
+    WIDE fold: 64 min-aggregates in ONE pass over the shingle-hash
+    stream, so band keys and signature arrays are pure projections. The
+    long format it replaced (explode to one row per (doc, slot), then a
+    per-(doc, band) groupBy) pushed 64× the rows through the partial
+    aggregate and paid a second keyed exchange — at sf0.1, the error
+    curve's fold alone 1.95 s long vs 1.38 s wide (r8), the band sweep
+    4.26 s vs 3.13 s in an interleaved A/B (r9), identical output. The
+    r6-era "wide form is compile-bound"
+    note no longer holds on Spark 4.1 (the 64-column fold
+    codegen-compiles in well under a second).
+
+    Not pinned: with a single consumer the band self-join's two sides
+    dedupe via ReusedExchange, and the repartition+localCheckpoint pin
+    cost two driver-blocking jobs per build for nothing (near_minhash
+    2.92 s pinned vs 2.72 s unpinned median with the mask cache in
+    place; the band sweep's checkpoint variants measured
+    equal-or-slower). The r8-era pin predates the raw-candidate verify
+    that removed near_minhash's extra downstream consumers; a caller
+    whose signatures have several consumers pins at its call site."""
+    th = grams_rows.select(
+        "doc_id", (ph60("gram", "mhs") % _MH_PRIME).alias("th")
+    )
+    return th.groupBy("doc_id").agg(
+        *[
+            F.min(
+                (F.col("th") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)
+            ).alias(f"w{i}")
+            for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
+        ]
+    )
+
+
+def _band_matches(wide):
+    """``(lo, hi, band_id)``: one row per 32×2 band on which two docs'
+    signatures (``_minhash_signatures``) agree, lo < hi. A pair agreeing
+    on k bands appears k times; what to do with that multiplicity is the
+    caller's choice.
+
+    Band key = w_2b·2³¹ + w_2b+1 — a BIJECTION of the ordered slot pair
+    (each slot < 2³¹−1), so the candidate set is identical to the
+    string key's, but the self-join seam carries an 8-byte integer
+    instead of a ~20-char string and no second hash enters it (the
+    DuckDB oracles keep the string form, which proves the bijection).
+    posexplode of the 32 projected keys replaces a per-band groupBy.
+
+    The self-join carries a ``shuffle_hash`` hint: the planner otherwise
+    BROADCASTS the 1.9 M-row band table (hash-table build on one thread;
+    band sweep warm 6.5 s → 5.6 s hinted, sf0.1 local[32]). At 100 TB
+    the band table never fits a broadcast, so the hint is also the
+    honest scale plan: both sides shuffle on (band_id, bkey) and join
+    partition-local."""
+    bands = wide.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.col(f"w{2 * b}") * F.lit(1 << 31)
+                    + F.col(f"w{2 * b + 1}")
+                    for b in range(32)
+                ]
+            )
+        ).alias("band_id", "bkey"),
+    )
+    lft = bands.alias("l")
+    rgt = bands.hint("shuffle_hash").alias("r")
+    return lft.join(
+        rgt,
+        (F.col("l.band_id") == F.col("r.band_id"))
+        & (F.col("l.bkey") == F.col("r.bkey"))
+        & (F.col("l.doc_id") < F.col("r.doc_id")),
+    ).select(
+        F.col("l.doc_id").alias("lo"),
+        F.col("r.doc_id").alias("hi"),
+        F.col("l.band_id").alias("band_id"),
+    )
+
+
+def _gram_jaccard(pairs, grams_rows):
+    """``pairs`` (keyed ``lo``, ``hi``; one row per pair) plus ``jac``,
+    the exact shingle-set Jaccard of each pair.
+
+    GRAM ARRAYS, not ``_verified_pairs``' rank-bitmask popcounts —
+    measured both ways (interleaved A/B under the nightly contention
+    window, r8 optimization round): a candidate stream that is already
+    one row per pair gains nothing downstream from the popcount, while
+    its side frames pay a vocab-distinct + rank-join + 15-wide bit_or
+    fold — band-sweep medians 9.1 s (arrays) vs 12.0 s (masks).
+    RE-PROBED in r9 after ``_gram_masks`` gained its shared cache (one
+    fold instead of one per side): arrays still win, 4.45 s vs 5.25 s —
+    the 426 k one-shot verifications don't amortize even a single
+    mask-frame build. The mask verify wins only where it lets the raw
+    multiplicity-bearing candidate stream skip its distinct
+    (dedup_ngram_jaccard 48.8→7.5 s).
+
+    BROADCAST the gram-set sides: without the hint the planner routes
+    the candidate rows AND the ~51-string gram arrays through two
+    sort-merge shuffles (measured 17 s at sf0.1, local[32]; the arrays
+    are the shuffle payload). At 100 TB the doc side no longer fits a
+    broadcast; there you run on a deterministic sample shard (a tuning
+    table or an accuracy audit needs relative, not exhaustive, counts)
+    or drop the hint and pay the shuffle once.
+
+    ``repartition(n)`` — round-robin, EXPLICIT count, n = the session's
+    defaultParallelism — before the joins: the upstream aggregate's
+    exchange is AQE-coalesced to ~2 partitions (426 k int rows are
+    byte-light), and a keyed repartition on (lo, hi) is ELIDED as
+    redundant with that exchange's partitioning — the verify then fuses
+    into a 2-task stage (measured 19-24 s at sf0.1, local[32] — the r6
+    pathology resurfacing through a new seam). Round-robin with an
+    explicit count cannot be elided or coalesced, and the
+    array-intersect verifications fan across all cores (~1 s)."""
+    sets = grams_rows.groupBy("doc_id").agg(
+        F.collect_set("gram").alias("grams")
+    )
+    lo = sets.select(
+        F.col("doc_id").alias("lo"), F.col("grams").alias("grams_lo")
+    )
+    hi = sets.select(
+        F.col("doc_id").alias("hi"), F.col("grams").alias("grams_hi")
+    )
+    jac = F.size(F.array_intersect("grams_lo", "grams_hi")) / F.size(
+        F.array_union("grams_lo", "grams_hi")
+    )
+    n = pairs.sparkSession.sparkContext.defaultParallelism
+    return (
+        pairs.repartition(n)
+        .join(F.broadcast(lo), "lo")
+        .join(F.broadcast(hi), "hi")
+        .select(*pairs.columns, jac.alias("jac"))
+    )
+
+
 @register("dedup_near_minhash", oracle=_NGRAM_ORACLE, tier="P2")
 def dedup_near_minhash(spark, t):
     """MinHash + LSH banding near-dedup over bigram shingles — the
     100 TB path.
 
-    Pipeline: bigram-shingle set → k=64 minhash signatures (universal
-    hashing of xxhash64 shingle hashes, all JVM-side) → 32 bands ×
-    2 rows → band-bucket self-join (candidates = pairs agreeing on ≥1
-    band) → EXACT shingle-Jaccard verification of candidates only.
+    Pipeline: bigram-shingle stream → k=64 minhash signatures (the
+    shared ph60 universal-hash family, ``_MH_A``/``_MH_B``, all
+    JVM-side) → 32 bands × 2 rows → band-bucket self-join (candidates =
+    pairs agreeing on ≥1 band) → EXACT shingle-Jaccard verification of
+    candidates only.
 
     Output = verified pairs (jaccard ≥ 0.6) — the same deterministic
     set as ``dedup_ngram_jaccard``, so it carries the same exact-SQL
@@ -513,75 +663,12 @@ def dedup_near_minhash(spark, t):
     instead — background Jaccard there is 0.61 on this 31-word
     vocabulary, and the recall needed at τ=0.9 forces band widths
     whose candidate set is effectively all-pairs; measured: 8×4 bands
-    missed 1 of 9,020 true pairs at sf0.01.) Unlike pyspark.ml's
-    MinHashLSH (random coefficients per fit), the hash family is fixed,
-    so results are reproducible run-to-run.
+    missed 1 of 9,020 true pairs at sf0.01.)
     """
-    n_hashes, n_bands = 64, 32
-    rows_per_band = n_hashes // n_bands
-    # Mersenne-prime (2^31-1) universal hashes of the shingle hash. The
-    # 31-bit domain keeps a*x+b under 2^63 — no bigint overflow under
-    # ANSI mode (Spark 4 default raises on silent wraparound).
-    prime = (1 << 31) - 1
-    rng_a = [((2 * i + 1) * 0x9E3779B9) % prime or 1 for i in range(n_hashes)]
-    rng_b = [((i * i + 7) * 0x27D4EB4F) % prime for i in range(n_hashes)]
-
-    from .corpus import _gram_str, _zip_grams
-
-    docs = t["documents"]
-    toks = F.split(F.col("text"), " ")
-    # One codegen zip-gram explode feeds both consumers: the signature
-    # stream keeps duplicate shingles (min() over universal hashes is
-    # duplicate-insensitive), and the verify-side gram SET re-forms via
-    # collect_set — one exchange, replacing the per-row
-    # array_distinct(transform(...)) build that evaluates interpreted
-    # (measured 23x on the rep filter; same lesson).
-    grams_rows = (
-        docs.filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("gram"))
-    )
-    g = grams_rows.select(
-        "doc_id", F.pmod(F.xxhash64("gram"), F.lit(prime)).alias("th")
-    )
-    # |docs|-row wide signature frame; both sides of the band self-join
-    # descend from it and dedupe via ReusedExchange, so no pin is
-    # needed (r9, measured: the r8 repartition+localCheckpoint pin cost
-    # two driver-blocking jobs per build for nothing — 2.92 s pinned vs
-    # 2.72 s unpinned median with the mask cache in place; the r8-era
-    # pin predates the raw-candidate verify that removed the extra
-    # downstream consumers).
-    sig = g.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("th") * F.lit(rng_a[i]) + F.lit(rng_b[i]))
-                % F.lit(prime)
-            ).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    # Bands: hash each contiguous signature slice to one bucket id.
-    band_cols = [
-        F.xxhash64(
-            *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        ).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
-    banded = sig.select("doc_id", *band_cols)
-    # Candidate pairs: agree on at least one band.
-    bands_long = banded.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band{b}").alias("bucket"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band_id", "bb.bucket")
-    l = bands_long.alias("l")
-    r = bands_long.alias("r")
+    # One gram stream feeds both consumers: the signature fold (min()
+    # is duplicate-insensitive) and the verify's set frame (bit_or
+    # absorbs duplicates).
+    grams_rows = _gram_rows(t["documents"], 2)
     # Raw band matches — one row per agreeing band per pair, NOT
     # distinct-ed (r8 optimization round, guide §2.4): on the verify's
     # mask branch a true pair's ≤32-band multiplicity costs a handful of
@@ -589,15 +676,15 @@ def dedup_near_minhash(spark, t):
     # dedupe the candidate set and then routed it with ~51-string gram
     # arrays through two sort-merge shuffles (array payload was the
     # shuffle; measured 17.2 s warm at sf0.1).
-    candidates = l.join(
-        r,
-        (F.col("l.band_id") == F.col("r.band_id"))
-        & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col("l.doc_id") < F.col("r.doc_id")),
-    ).select(F.col("l.doc_id").alias("id_lo"), F.col("r.doc_id").alias("id_hi"))
-    # Exact verification of candidates only (shingle-set intersection).
-    verified = _verified_pairs(candidates, *_gram_masks(grams_rows), 0.6)
-    return verified.select("id_lo", "id_hi", r4(F.col("jaccard")).alias("jaccard"))
+    matches = _band_matches(_minhash_signatures(grams_rows))
+    verified = _verified_pairs(
+        matches, *_gram_masks(grams_rows), 0.6, keys=("lo", "hi")
+    )
+    return verified.select(
+        F.col("lo").alias("id_lo"),
+        F.col("hi").alias("id_hi"),
+        r4(F.col("jaccard")).alias("jaccard"),
+    )
 
 
 @register(
@@ -687,111 +774,18 @@ def dedup_lsh_band_sweep(spark, t):
     all three bandings independently, so the hash check proves the
     nesting derivation, not just the arithmetic.
 
-    Signatures use the portable md5 hash family (``ph60 % (2³¹−1)``,
-    fixed Mersenne universal coefficients) so DuckDB recomputes them
-    bit-identically — candidate COUNTS are hash-checked, not just the
-    verified survivors. Band buckets join on the raw signature slice
-    (injective per engine), so no second hash enters the seam.
-
-    Plan notes, each measured at sf0.1 (local[32]):
-    - Signatures in WIDE format since r9 — 64 min-agg columns in one
-      pass, band keys as pure projections (posexplode), matching the
-      error-curve op's r8 restructure. The r6-era "wide form is
-      compile-bound" note no longer holds on Spark 4.1 (the 64-column
-      fold codegen-compiles in well under a second); the long-format
-      fold it replaces pushed 64× the rows through the partial
-      aggregate and paid a second keyed exchange — A/B 4.26 s long vs
-      3.13 s wide, identical output.
-    - The band self-join carries a ``shuffle_hash`` hint: the planner
-      otherwise BROADCASTS the 1.9 M-row band table (hash-table build
-      on one thread; warm 6.5 s → 5.6 s hinted). At 100 TB the band
-      table never fits a broadcast, so the hint is also the honest
-      scale plan: both sides shuffle on (band_id, bkey) and join
-      partition-local.
-    - ``repartition(par)`` (round-robin, EXPLICIT count) between the
-      mask aggregate and the verify: the mask groupBy's exchange is
-      AQE-coalesced to ~2 partitions (426 k int rows are byte-light),
-      and a keyed repartition on (lo, hi) is ELIDED as redundant with
-      that exchange's partitioning — the verify then fuses into a
-      2-task stage (measured 19-24 s, the r6 pathology resurfacing
-      through a new seam). Round-robin with an explicit count cannot
-      be elided or coalesced, and the 426 k array-intersect
-      verifications fan across all cores (~1 s).
-    - No localCheckpoint anywhere: every subtree now has a single
-      consumer (the self-join's two sides dedupe via ReusedExchange),
-      and checkpoint variants measured equal-or-slower — the r7
-      checkpoints existed to share sigl across THREE bandings.
-    - BROADCAST the gram-set side of the verify: without the hint the
-      planner routes the candidate rows AND the ~51-string gram arrays
-      through two sort-merge shuffles (measured 17 s; the arrays are
-      the shuffle payload). At 100 TB the doc side no longer fits a
-      broadcast; there you run the sweep on a deterministic sample
-      shard (a tuning table needs relative, not exhaustive, counts) or
-      drop the hint and pay the shuffle once.
+    Signatures and 32×2 band matches come from the same
+    ``_minhash_signatures``/``_band_matches`` that
+    ``dedup_near_minhash`` and ``dedup_minhash_error_curve`` use, so by
+    construction the b32r2 row counts exactly the candidate set
+    ``dedup_near_minhash`` verifies, and the error curve audits exactly
+    those signatures. The verify is ``_gram_jaccard`` (gram arrays on
+    the already-one-row-per-pair mask frame). No localCheckpoint: the
+    r7 checkpoints existed to share the signatures across THREE
+    bandings; one banding leaves every subtree a single consumer.
     """
-    from ..functions.portable_hash import ph60
-    from .corpus import _gram_str, _zip_grams
-
-    n_hashes = 64
-    prime = (1 << 31) - 1
-    rng_a = [((2 * i + 1) * 0x9E3779B9) % prime for i in range(n_hashes)]
-    rng_b = [((i * i + 7) * 0x27D4EB4F) % prime for i in range(n_hashes)]
-    par = spark.sparkContext.defaultParallelism
-
-    docs = t["documents"]
-    toks = F.split(F.col("text"), " ")
-    grams_rows = (
-        docs.filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("gram"))
-    )
-    th = grams_rows.select(
-        "doc_id", (ph60("gram", "mhs") % prime).alias("th")
-    )
-    # WIDE signature fold + posexplode band keys (r9 — the structure
-    # dedup_minhash_error_curve adopted in r8, now measured for this
-    # shape too: 64 min-aggregates in ONE pass over the token-hash
-    # stream, band keys as pure projections; the long-format fold +
-    # per-(doc, band) groupBy it replaces pushed 64× the rows through
-    # the partial aggregate and paid a second keyed exchange —
-    # interleaved A/B at sf0.1: 4.26 s long vs 3.13 s wide, identical
-    # output rows). Band key = w_2b * 2^31 + w_2b+1 — a BIJECTION of
-    # the i-ordered slot pair (each mh < 2^31−1), so the candidate set
-    # is identical to the oracle's string key's; the oracle keeps the
-    # string form, which proves the bijection.
-    wide = th.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("th") * F.lit(rng_a[i]) + F.lit(rng_b[i]))
-                % F.lit(prime)
-            ).alias(f"w{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    bands2 = wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.col(f"w{2 * b}") * F.lit(1 << 31)
-                    + F.col(f"w{2 * b + 1}")
-                    for b in range(n_hashes // 2)
-                ]
-            )
-        ).alias("band_id", "bkey"),
-    )
-    lft = bands2.alias("l")
-    rgt = bands2.hint("shuffle_hash").alias("r")
-    matches = lft.join(
-        rgt,
-        (F.col("l.band_id") == F.col("r.band_id"))
-        & (F.col("l.bkey") == F.col("r.bkey"))
-        & (F.col("l.doc_id") < F.col("r.doc_id")),
-    ).select(
-        F.col("l.doc_id").alias("lo"),
-        F.col("r.doc_id").alias("hi"),
-        F.col("l.band_id").alias("band_id"),
-    )
+    grams_rows = _gram_rows(t["documents"], 2)
+    matches = _band_matches(_minhash_signatures(grams_rows))
     masks = matches.groupBy("lo", "hi").agg(
         F.sum(F.expr("shiftleft(1L, band_id)")).alias("mask")
     )
@@ -806,40 +800,10 @@ def dedup_lsh_band_sweep(spark, t):
         .bitwiseAND(F.lit(0x11111111))
         != 0
     ).cast("int")
-    # Exact verify on GRAM ARRAYS, not rank-bitmask popcounts — measured
-    # both ways (interleaved A/B under the nightly contention window,
-    # r8 optimization round): this shape's candidate stream is already
-    # one row per pair (the mask fold above is the aggregation), so the
-    # popcount verify saves nothing downstream while its side frames
-    # pay a vocab-distinct + rank-join + 15-wide bit_or fold —
-    # band-sweep medians 9.1 s (arrays) vs 12.0 s (masks). RE-PROBED in
-    # r9 after _gram_masks gained its shared cache (one fold instead of
-    # one per side): arrays still win, 4.45 s vs 5.25 s — the 426 k
-    # one-shot verifications don't amortize even a single mask-frame
-    # build. The mask verify wins only where it lets the raw
-    # multiplicity-bearing candidate stream skip its distinct
-    # (dedup_ngram_jaccard 48.8→7.5 s); here arrays win.
-    gram_sets = grams_rows.groupBy("doc_id").agg(
-        F.collect_set("gram").alias("grams")
-    )
-    lo = gram_sets.select(
-        F.col("doc_id").alias("lo"), F.col("grams").alias("grams_lo")
-    )
-    hi = gram_sets.select(
-        F.col("doc_id").alias("hi"), F.col("grams").alias("grams_hi")
-    )
-    j = F.size(F.array_intersect("grams_lo", "grams_hi")) / F.size(
-        F.array_union("grams_lo", "grams_hi")
-    )
-    flags = (
-        masks.repartition(par)
-        .join(F.broadcast(lo), "lo")
-        .join(F.broadcast(hi), "hi")
-        .select(
-            (j >= 0.6).cast("int").alias("ok"),
-            in16.alias("in16"),
-            in8.alias("in8"),
-        )
+    flags = _gram_jaccard(masks, grams_rows).select(
+        (F.col("jac") >= 0.6).cast("int").alias("ok"),
+        in16.alias("in16"),
+        in8.alias("in8"),
     )
     tot = flags.agg(
         F.count(F.lit(1)).alias("c32"),
@@ -1490,16 +1454,7 @@ def dedup_substring_spans(spark, t):
     """
     from pyspark.sql import Window
 
-    from .corpus import _gram_str, _zip_grams
-
-    K = 8
-    toks = F.split(F.col("text"), " ")
-    grams = (
-        t["documents"]
-        .filter(F.size(toks) >= K)
-        .select("doc_id", F.explode(_zip_grams(toks, K)).alias("t"))
-        .select("doc_id", _gram_str(K).alias("g"))
-    )
+    grams = _gram_rows(t["documents"], 8).withColumnRenamed("gram", "g")
     pairs = grams.groupBy("g", "doc_id").agg(F.count(F.lit(1)).alias("c"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("g"))
     return (
@@ -1882,94 +1837,29 @@ def dedup_minhash_error_curve(spark, t):
     each bin's mean estimate vs mean truth. The E[err] ≈ 1/√64 ≈ 0.125
     theory line is checkable directly against the bin masses — the
     sketch-accuracy-report idiom (`agg_sketch_accuracy_report`) applied
-    to the dedup rung. Same ph60 hash family and seeds as
-    ``dedup_lsh_band_sweep``/``dedup_near_minhash``, so this audits the
-    signatures those rungs actually use.
+    to the dedup rung, on the signatures ``dedup_near_minhash`` and
+    ``dedup_lsh_band_sweep`` use (see the sweep).
 
-    Scale shape: candidates come from band buckets (never all pairs);
-    the slot-agreement count joins the long-format signature table
-    twice on (doc, i) — 64 narrow int rows per candidate side, a
-    data-proportional shuffle with no strings; the exact-Jaccard side
-    broadcasts the gram sets exactly as the band sweep does. Error
-    bins are FLOOR(|est − exact|·16): est is an exact k/64, the ×16 is
-    a power-of-two (exact), and both engines floor the identical IEEE
-    double. Bin means use integer micro-unit sums (k_agree ints;
+    Scale shape: candidates come from band buckets (never all pairs),
+    distinct-ed to one row per pair; the slot-agreement count and the
+    exact Jaccard (``_gram_jaccard``, as in the band sweep) ride those
+    rows. Error bins are FLOOR(|est − exact|·16): est is an exact k/64,
+    the ×16 is a power-of-two (exact), and both engines floor the
+    identical IEEE double. Bin means use integer micro-unit sums (k_agree ints;
     jaccard per-pair quantized to 2⁻²⁰) with ONE final division each.
     """
-    from ..functions.portable_hash import ph60
-    from .corpus import _gram_str, _zip_grams
-
-    n_hashes = 64
-    prime = (1 << 31) - 1
-    rng_a = [((2 * i + 1) * 0x9E3779B9) % prime for i in range(n_hashes)]
-    rng_b = [((i * i + 7) * 0x27D4EB4F) % prime for i in range(n_hashes)]
     par = spark.sparkContext.defaultParallelism
-
-    docs = t["documents"]
-    toks = F.split(F.col("text"), " ")
-    grams_rows = (
-        docs.filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("gram"))
-    )
-    th = grams_rows.select(
-        "doc_id", (ph60("gram", "mhs") % prime).alias("th")
-    )
-    # WIDE signature fold (r8 perf fix): 64 min-aggregates in ONE pass
-    # over the token-hash stream — the explode-to-long form pushed 64x
-    # the rows through the partial aggregate (measured 1.95 s vs 1.38 s
-    # for the fold alone at sf0.1) and then needed TWO more groupBys to
-    # shape bands and signature arrays; from the wide frame both are
-    # pure projections. Signatures feed three consumers — pin once;
-    # explicit repartition first, per the AQE-coalesce rule.
+    grams_rows = _gram_rows(t["documents"], 2)
+    # The signatures feed three consumers here (the band join and both
+    # slot-agreement sides) — pin once; explicit repartition first, per
+    # the AQE-coalesce rule (see _gram_jaccard).
     wide = (
-        th.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.col("th") * F.lit(rng_a[i]) + F.lit(rng_b[i]))
-                    % F.lit(prime)
-                ).alias(f"w{i}")
-                for i in range(n_hashes)
-            ]
-        )
+        _minhash_signatures(grams_rows)
         .repartition(par, "doc_id")
         .localCheckpoint()
     )
-    sig_col = F.array(*[F.col(f"w{i}") for i in range(n_hashes)])
-    # band key = w_2b * 2^31 + w_2b+1 — a BIJECTION of the ordered slot
-    # pair (each mh < 2^31-1), so the candidate set is identical to the
-    # string key's but the self-join seam carries an 8-byte integer
-    # instead of a ~20-char string (the oracle keeps the string form,
-    # which proves the bijection); posexplode of the 32 projected keys
-    # replaces the per-band groupBy entirely
-    bands2 = wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.col(f"w{2 * b}") * F.lit(1 << 31)
-                    + F.col(f"w{2 * b + 1}")
-                    for b in range(n_hashes // 2)
-                ]
-            )
-        ).alias("band_id", "bkey"),
-    )
-    lft = bands2.alias("l")
-    rgt = bands2.hint("shuffle_hash").alias("r")
-    cand = (
-        lft.join(
-            rgt,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("lo"), F.col("r.doc_id").alias("hi")
-        )
-        .distinct()
-        .repartition(par)
-    )
+    sig_col = F.array(*[F.col(f"w{i}") for i in range(64)])
+    cand = _band_matches(wide).select("lo", "hi").distinct().repartition(par)
     # slot agreement rides the candidate rows as ARRAY algebra: each
     # side attaches its 64-slot signature as ONE array column (a pure
     # projection of the wide frame), and k_agree is a per-row
@@ -1999,29 +1889,7 @@ def dedup_minhash_error_curve(spark, t):
             ).cast("bigint").alias("k_agree"),
         )
     )
-    # Exact-Jaccard side on GRAM ARRAYS, not rank-bitmask popcounts —
-    # same measured verdict as the band sweep (see its verify comment):
-    # the candidate stream here is already distinct-ed, so the mask
-    # verify's per-broadcast-side vocab-rank + bit_or fold overhead
-    # outweighs the popcount-vs-array_intersect saving.
-    gram_sets = grams_rows.groupBy("doc_id").agg(
-        F.collect_set("gram").alias("grams")
-    )
-    lo = gram_sets.select(
-        F.col("doc_id").alias("lo"), F.col("grams").alias("grams_lo")
-    )
-    hi = gram_sets.select(
-        F.col("doc_id").alias("hi"), F.col("grams").alias("grams_hi")
-    )
-    jac = F.size(F.array_intersect("grams_lo", "grams_hi")) / F.size(
-        F.array_union("grams_lo", "grams_hi")
-    )
-    curve = (
-        est.repartition(par)
-        .join(F.broadcast(lo), "lo")
-        .join(F.broadcast(hi), "hi")
-        .select("k_agree", jac.alias("jac"))
-    )
+    curve = _gram_jaccard(est, grams_rows)
     return (
         curve.groupBy(
             F.floor(F.abs(F.col("k_agree") / 64.0 - F.col("jac")) * 16)

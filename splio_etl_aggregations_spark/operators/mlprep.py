@@ -385,17 +385,12 @@ def pipeline_training_set(spark, t):
     placement — so the chain inherits each stage's 100 TB posture; the
     only driver-visible state is the |lang|x8 summary.
     """
-    from .corpus import _gram_str, _zip_grams
+    from .corpus import _gram_rows
 
     docs = t["documents"]
-    toks = F.split(F.col("text"), " ")
 
     def gram_stats(n: int):
-        ex = (
-            docs.filter(F.size(toks) >= n)
-            .select("doc_id", F.explode(_zip_grams(toks, n)).alias("t"))
-            .select("doc_id", _gram_str(n).alias("g"))
-        )
+        ex = _gram_rows(docs, n).withColumnRenamed("gram", "g")
         return (
             ex.groupBy("doc_id", "g")
             .agg(F.count(F.lit(1)).alias("c"))

@@ -218,24 +218,17 @@ token = st.text(alphabet="abcx", min_size=1, max_size=3)
 @SLOW
 @given(docs=st.lists(st.lists(token, min_size=0, max_size=12), min_size=1, max_size=8))
 def test_zip_grams_match_python_reference(spark, docs):
-    """The codegen zip-gram build (arrays_zip of shifted slices) emits
-    exactly the n-grams a plain Python sliding window produces, for
-    n=2 and n=3, on arbitrary token lists."""
-    from splio_etl_aggregations_spark.operators.corpus import (
-        _gram_str,
-        _zip_grams,
-    )
+    """The codegen zip-gram stream (``_gram_rows``: arrays_zip of
+    shifted slices, docs shorter than n dropped) emits exactly the
+    n-grams a plain Python sliding window produces, for n=2 and n=3, on
+    arbitrary token lists."""
+    from splio_etl_aggregations_spark.operators.corpus import _gram_rows
 
     rows = [(i, " ".join(d)) for i, d in enumerate(d for d in docs)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    toks = F.split(F.col("text"), " ")
     for n in (2, 3):
         got = sorted(
-            (r["doc_id"], r["g"])
-            for r in df.filter(F.size(toks) >= n)
-            .select("doc_id", F.explode(_zip_grams(toks, n)).alias("t"))
-            .select("doc_id", _gram_str(n).alias("g"))
-            .collect()
+            (r["doc_id"], r["gram"]) for r in _gram_rows(df, n).collect()
         )
         # split(text, ' ') parses '' as [''], matching the engine's
         # tokenizer convention — mirror it here

@@ -127,18 +127,6 @@ def test_contamination_hits_recompute_by_hand(spark):
         assert r["n_window_hits"] == hits, r
 
 
-def test_minhash_error_curve_bins_are_sane(spark):
-    rows = Q["dedup_minhash_error_curve"].run(spark, SF_SMALL).collect()
-    assert rows and sum(r["n_pairs"] for r in rows) > 0
-    for r in rows:
-        assert 0 <= r["err_bin"] <= 16
-        assert 0.0 <= r["mean_est"] <= 1.0
-        assert 0.0 <= r["mean_exact"] <= 1.0
-    # exact duplicates exist in the fixture: the zero-error bin is
-    # populated (identical docs agree on all 64 slots and jaccard 1.0)
-    assert rows[0]["err_bin"] == 0 and rows[0]["n_pairs"] > 0
-
-
 # -------------------------------------------------- joins / etl / aggs
 
 def test_range_bucketed_window_counts_recompute_by_hand(spark):

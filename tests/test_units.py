@@ -146,7 +146,10 @@ def test_minhash_output_equals_exact_jaccard(spark):
     """The LSH pipeline's verified output must equal the exact operator's
     pair set at the same threshold (candidates ⊇ true pairs at j≥0.6 with
     overwhelming probability: 32 bands × 2 rows → miss-prob ≤ (1-.6²)³² ≈ 6e-7
-    per pair; shingle banding, so compare against the exact bigram op)."""
+    per pair; shingle banding, so compare against the exact bigram op).
+    The equality, not just recall >= 0.99, is pinned to the frozen
+    sf0.001 fixture + the ph60 hash family, exactly as
+    test_band_sweep_candidate_sets_nest_and_agree_with_exact describes."""
     exact = {
         (r["id_lo"], r["id_hi"]) for r in Q["dedup_ngram_jaccard"].run(spark, SF_SMALL).collect()
     }
@@ -2677,6 +2680,18 @@ def test_band_sweep_candidate_sets_nest_and_agree_with_exact(spark):
     # "verified is a subset of exact with recall >= 0.99" — a miss here
     # after a regen is expected LSH behavior, not a code bug (ADVICE r6).
     assert ver(c32) == exact_pairs
+
+
+def test_minhash_error_curve_bins_are_sane(spark):
+    rows = Q["dedup_minhash_error_curve"].run(spark, SF_SMALL).collect()
+    assert rows and sum(r["n_pairs"] for r in rows) > 0
+    for r in rows:
+        assert 0 <= r["err_bin"] <= 16
+        assert 0.0 <= r["mean_est"] <= 1.0
+        assert 0.0 <= r["mean_exact"] <= 1.0
+    # exact duplicates exist in the fixture: the zero-error bin is
+    # populated (identical docs agree on all 64 slots and jaccard 1.0)
+    assert rows[0]["err_bin"] == 0 and rows[0]["n_pairs"] > 0
 
 
 def test_histogram_quantiles_bracket_exact_percentiles(spark):

@@ -32,8 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from splio_etl_aggregations_spark.operators import dedup as dd  # noqa: E402
 from splio_etl_aggregations_spark.operators.corpus import (  # noqa: E402
-    _gram_str,
-    _zip_grams,
+    _gram_rows,
 )
 from splio_etl_aggregations_spark.session import get_spark  # noqa: E402
 from tools.scaling import scaled_tables  # noqa: E402
@@ -59,12 +58,7 @@ def probe(spark, t):
     wall = time.perf_counter() - t0
     out.append(("token(_ranked_sets)", n_docs, n_words, masks, wall))
     # gram rung (dedup_near_minhash)
-    toks = F.split(F.col("text"), " ")
-    grams_rows = (
-        t["documents"].filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(_zip_grams(toks, 2)).alias("t"))
-        .select("doc_id", _gram_str(2).alias("gram"))
-    )
+    grams_rows = _gram_rows(t["documents"], 2)
     t0 = time.perf_counter()
     gmasks, gw, gd = dd._gram_masks(grams_rows)
     noop(gmasks)
