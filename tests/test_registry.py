@@ -67,16 +67,29 @@ def test_driver_window_rotated():
 
     # IDs intentionally re-sampled this round to prove a fix under the
     # real driver hash (empty => the whole window is new coverage).
-    # Round 8: multimodal_decode_features / multimodal_frame_sample were
-    # driver-green in r3 against the retired _fake_ stubs; the r6+r7
-    # verdicts asked for a re-sample against the real BMP/PNG/GIF codecs.
-    # ml_bootstrap_ci_hash was green in r7 but VERDICT r7 #3 changed its
-    # implementation AND oracle (one ph60 hash, 32 bit-slice parities) —
-    # the old driver row is evidence for the retired form.
+    # Round 10: only 42 never-sampled oracle-backed IDs remain, so the
+    # other 8 slots re-sample the IDs whose operator code was rerouted
+    # onto a shared primitive after their last driver-green row, oldest
+    # green row first — each old driver row is evidence for the retired
+    # implementation.
     RESAMPLE_ALLOWLIST: set[str] = {
-        "multimodal_decode_features",
-        "multimodal_frame_sample",
-        "ml_bootstrap_ci_hash",
+        # r1 row; its prefix-join verify now runs in shared _verified_pairs
+        "dedup_near_jaccard",
+        # r1 row; its prefix-join verify now runs in shared _verified_pairs
+        "dedup_ngram_jaccard",
+        # r1 row; its near-dup pair source now runs in _verified_pairs
+        "dedup_connected_components",
+        # r1 row; its CC pair source now runs in shared _verified_pairs
+        "pipeline_clean_corpus",
+        # r2 row; the shared ph60 MinHash-LSH front end (new plan) and
+        # _verified_pairs replaced its xxhash64 signatures and inline verify
+        "dedup_near_minhash",
+        # r3 row; two_phase_scan replaced its inline prefix sum
+        "corpus_pack_sequences",
+        # r3 row; its containment verify now runs in shared _verified_pairs
+        "dedup_containment",
+        # r4 row; two_phase_scan replaced its inline running max
+        "dq_monotonic_id_gap_check",
     }
 
     repo = pathlib.Path(__file__).resolve().parent.parent
